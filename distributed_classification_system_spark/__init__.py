@@ -11,7 +11,8 @@ load-test analytics — as an idiomatic Spark engine:
 - input: table/stream of multi-turn agent transcripts
   ``(conv_id, turn_idx, role, text, tool, ts)``
 - classification kernel: vectorized Arrow/pandas UDF (no per-row Python)
-- session fold: ``applyInPandasWithState`` keyed by ``conv_id``
+- session fold: ``applyInPandasWithState`` keyed by a hash bucket of
+  ``conv_id`` (one state row per bucket)
 - sink: idempotent MERGE keyed ``(conv_id, turn_idx)`` (exactly-once)
 - analytics: Catalyst-native window/aggregate queries
 

@@ -14,6 +14,14 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_heap() -> str:
+    """A quarter of physical RAM, clamped to 1-8 GB. A heap cap above
+    physical RAM lets the driver heap grow until the kernel OOM-kills the
+    JVM (seen mid test suite on a 15 GB machine)."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(8192, max(1024, ram_mb // 4))}m"
+
+
 def get_spark(
     app_name: str = "dcs_spark",
     cpus: int | None = None,
@@ -37,7 +45,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or _default_heap())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
         # smaller splits than the 128m default: local-scale inputs are a

@@ -7,7 +7,7 @@ Pipeline (one streaming query, one state store, one shuffle, one write):
       ──▶ vectorized classification on scan partitions (Arrow pandas UDF,
           K1-K6/P6 — no shuffle before the kernel)
       ──▶ exchange on bucket = hash(conv_id) % B
-      ──▶ applyInPandasWithState(bucket_session_fold)            [A1-A6, T5]
+      ──▶ applyInPandasWithState(bucket_fold)                    [A1-A6, T5]
       ──▶ foreachBatch: ONE idempotent batch-id/row_type-partitioned
           write                                                   [S6/T1]
             ├── row_type=turn     (exactly-once keyed (conv_id, turn_idx))
@@ -27,6 +27,7 @@ On a real cluster the same shape minimizes network bytes instead.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,9 +40,8 @@ from distributed_classification_system_spark.schemas import TRANSCRIPTS
 from distributed_classification_system_spark.streaming.state import (
     BUCKET_STATE_SCHEMA,
     FOLD_OUTPUT,
-    STATE_SCHEMA,
-    bucket_session_fold,
-    session_fold,
+    SUMMARY_OUTPUT,
+    bucket_fold,
 )
 
 WATERMARK_DELAY = "5 minutes"
@@ -80,7 +80,6 @@ def classified_stream(
     stream: DataFrame,
     conv_config: DataFrame,
     registry: DataFrame,
-    salt_buckets: int | None = None,
     watermark: str = WATERMARK_DELAY,
     dedup_within_watermark: bool = False,
     broadcast_config: bool = True,
@@ -91,11 +90,8 @@ def classified_stream(
     The registry always broadcasts (tiny); the conv_config join has two
     scales — see _config_join. With the default broadcast the kernel runs
     on scan partitions with NO shuffle before it; the only shuffle in the
-    whole pipeline is the bucket exchange feeding the keyed fold.
-    ``salt_buckets`` keeps the T10 salting available for the
-    per-conversation fold mode, where a hot conv_id would otherwise pin
-    one task; the default bucketed fold spreads the kernel work by scan
-    partition already, so it defaults off."""
+    whole pipeline is the bucket exchange feeding the keyed fold, so a
+    hot conversation's kernel work spreads by scan partition."""
     df = stream.withWatermark("ts", watermark)
     if dedup_within_watermark:
         # native JVM stateful dedup — the at-least-once redelivery guard
@@ -120,10 +116,6 @@ def classified_stream(
     # T6 dead-letter tag: one codegen'd CASE per row; tagged rows still ride
     # the same query (kernel is null-safe) and exit as row_type='error'
     df = df.withColumn("error_reason", error_reason_expr())
-    if salt_buckets:
-        # spread hot conversations across tasks for the stateless kernel
-        # stage; the keyed fold re-gathers by conv_id afterwards (T10)
-        df = df.repartition(F.col("conv_id"), F.pmod(F.xxhash64("turn_idx"), F.lit(salt_buckets)))
     from distributed_classification_system_spark.functions.kernel import (
         make_registry_classify_udf,
     )
@@ -163,49 +155,20 @@ def classified_stream(
     )
 
 
-def folded_stream(classified: DataFrame, fold_buckets: int | None = DEFAULT_FOLD_BUCKETS) -> DataFrame:
-    """The keyed session fold (turn pass-through + summary emission).
-
-    ``fold_buckets``: number of state buckets for the bucketed fold (the
-    high-cardinality default — python crossings per batch scale with
-    buckets, not conversations). ``None``/0 selects the one-key-per-
-    conversation fold (same semantics; used for differential testing)."""
-    if fold_buckets:
-        bucketed = classified.withColumn(
-            "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(fold_buckets))
-        )
-        return bucketed.groupBy("bucket").applyInPandasWithState(
-            bucket_session_fold,
-            outputStructType=FOLD_OUTPUT,
-            stateStructType=BUCKET_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf="EventTimeTimeout",
-        )
-    return classified.groupBy("conv_id").applyInPandasWithState(
-        session_fold,
-        outputStructType=FOLD_OUTPUT,
-        stateStructType=STATE_SCHEMA,
+def folded_stream(
+    df: DataFrame, fold_buckets: int = DEFAULT_FOLD_BUCKETS, emit_turns: bool = True
+) -> DataFrame:
+    """The keyed session fold over ``fold_buckets`` state buckets (python
+    crossings per batch scale with buckets, not conversations).
+    ``emit_turns=False`` is the cascade's summary-only fold (see
+    state.bucket_fold)."""
+    bucketed = df.withColumn("bucket", F.pmod(F.xxhash64("conv_id"), F.lit(fold_buckets)))
+    return bucketed.groupBy("bucket").applyInPandasWithState(
+        functools.partial(bucket_fold, emit_turns=emit_turns),
+        outputStructType=FOLD_OUTPUT if emit_turns else SUMMARY_OUTPUT,
+        stateStructType=BUCKET_STATE_SCHEMA,
         outputMode="append",
         timeoutConf="EventTimeTimeout",
-    )
-
-
-def tws_folded_stream(
-    classified: DataFrame, fold_buckets: int | None = DEFAULT_FOLD_BUCKETS
-) -> DataFrame:
-    """The same bucketed session fold on Spark 4's transformWithState API
-    (StatefulProcessor + RocksDB + real per-key timers). Differential-
-    tested against folded_stream; see streaming/tws.py."""
-    from distributed_classification_system_spark.streaming.tws import BucketFoldProcessor
-
-    bucketed = classified.withColumn(
-        "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(fold_buckets or DEFAULT_FOLD_BUCKETS))
-    )
-    return bucketed.groupBy("bucket").transformWithStateInPandas(
-        statefulProcessor=BucketFoldProcessor(),
-        outputStructType=FOLD_OUTPUT,
-        outputMode="append",
-        timeMode="eventTime",
     )
 
 
@@ -358,8 +321,7 @@ def run_stream(
     registry: DataFrame,
     checkpoint_dir: str | None = None,
     max_files_per_trigger: int | None = None,
-    salt_buckets: int | None = None,
-    fold_buckets: int | None = DEFAULT_FOLD_BUCKETS,
+    fold_buckets: int = DEFAULT_FOLD_BUCKETS,
     watermark: str = WATERMARK_DELAY,
     await_termination: bool = False,
     collect_metrics: bool = True,
@@ -372,9 +334,7 @@ def run_stream(
     join (see _config_join) — identical output, differential-tested.
 
     ``mode='unified'`` (default): one query — classify → bucketed stateful
-    fold (turns pass through the state op) → one idempotent write. Highest
-    measured throughput: the extra Arrow round-trip of the payload costs
-    less than cascade's dedup shuffle + second source scan.
+    fold (turns pass through the state op) → one idempotent write.
 
     ``mode='cascade'`` (requires ``await_termination``): two chained
     availableNow queries —
@@ -390,6 +350,12 @@ def run_stream(
 
     ``max_files_per_trigger`` paces micro-batches the way the reference's
     long-poll batch size (≤10 msgs) paces SQS consumption (S1)."""
+    if mode not in ("unified", "cascade"):
+        raise ValueError(f"unknown mode {mode!r}: expected 'unified' or 'cascade'")
+    if mode == "cascade" and not await_termination:
+        raise ValueError(
+            "cascade mode runs two chained availableNow queries: needs await_termination=True"
+        )
     checkpoint_dir = checkpoint_dir or os.path.join(out_dir, "_checkpoint")
 
     listener = None
@@ -414,59 +380,25 @@ def run_stream(
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.parquet(input_dir)
 
-    if mode in ("unified", "tws"):
+    if mode == "unified":
         classified = classified_stream(
-            stream, conv_config, registry, salt_buckets, watermark,
-            broadcast_config=broadcast_config,
+            stream, conv_config, registry, watermark, broadcast_config=broadcast_config,
         )
-        prev_provider = None
-        if mode == "tws":
-            # transformWithState requires the RocksDB store; the provider
-            # is captured at query start, so set-then-restore is safe
-            from distributed_classification_system_spark.streaming.tws import (
-                ROCKSDB_PROVIDER,
-                tws_available,
-            )
-
-            if not tws_available():
-                raise RuntimeError(
-                    "mode='tws' needs google.protobuf (transformWithState's "
-                    "state protocol), which is not installed here — see "
-                    "streaming/tws.py; use mode='unified' instead"
-                )
-            key = "spark.sql.streaming.stateStore.providerClass"
-            prev_provider = spark.conf.get(key, None)
-            spark.conf.set(key, ROCKSDB_PROVIDER)
-            folded = tws_folded_stream(classified, fold_buckets)
-        else:
-            folded = folded_stream(classified, fold_buckets)
-        try:
-            q = (
-                folded.writeStream.outputMode("append")
-                .option("checkpointLocation", checkpoint_dir)
-                .foreachBatch(_sink_batch(out_dir))
-                .trigger(availableNow=True)
-                .start()
-            )
-        finally:
-            if mode == "tws":
-                if prev_provider:
-                    spark.conf.set(key, prev_provider)
-                else:
-                    spark.conf.unset(key)
+        q = (
+            folded_stream(classified, fold_buckets)
+            .writeStream.outputMode("append")
+            .option("checkpointLocation", checkpoint_dir)
+            .foreachBatch(_sink_batch(out_dir))
+            .trigger(availableNow=True)
+            .start()
+        )
         if await_termination:
             q.awaitTermination()
             _finish()
         return q
 
-    assert await_termination, "cascade mode runs two chained availableNow queries"
-    from distributed_classification_system_spark.streaming.state import (
-        SUMMARY_OUTPUT,
-        bucket_summary_fold,
-    )
-
     classified = classified_stream(
-        stream, conv_config, registry, salt_buckets, watermark,
+        stream, conv_config, registry, watermark,
         dedup_within_watermark=True, broadcast_config=broadcast_config,
     )
     q1 = (
@@ -490,17 +422,10 @@ def run_stream(
             "conv_id",
             "left",
         )
-        .withColumn("bucket", F.pmod(F.xxhash64("conv_id"), F.lit(fold_buckets or DEFAULT_FOLD_BUCKETS)))
-    )
-    folded = slim.groupBy("bucket").applyInPandasWithState(
-        bucket_summary_fold,
-        outputStructType=SUMMARY_OUTPUT,
-        stateStructType=BUCKET_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="EventTimeTimeout",
     )
     q2 = (
-        folded.writeStream.outputMode("append")
+        folded_stream(slim, fold_buckets, emit_turns=False)
+        .writeStream.outputMode("append")
         .option("checkpointLocation", os.path.join(checkpoint_dir, "q2"))
         .foreachBatch(_summary_sink(out_dir))
         .trigger(availableNow=True)

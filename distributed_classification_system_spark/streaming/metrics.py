@@ -9,7 +9,6 @@ the input to the W1-W8 analysis windows in operators/rollup.py.
 
 from __future__ import annotations
 
-import json
 import os
 import threading
 
@@ -17,12 +16,11 @@ from pyspark.sql.streaming import StreamingQueryListener
 
 
 class MetricsListener(StreamingQueryListener):
-    """Collects per-batch progress rows; optionally spools to JSONL."""
+    """Collects per-batch progress rows."""
 
-    def __init__(self, spool_path: str | None = None):
+    def __init__(self):
         self.rows: list[dict] = []
         self._lock = threading.Lock()
-        self.spool_path = spool_path
 
     def onQueryStarted(self, event):
         pass
@@ -41,9 +39,6 @@ class MetricsListener(StreamingQueryListener):
         }
         with self._lock:
             self.rows.append(row)
-            if self.spool_path:
-                with open(self.spool_path, "a") as f:
-                    f.write(json.dumps(row, default=str) + "\n")
 
     def onQueryTerminated(self, event):
         pass

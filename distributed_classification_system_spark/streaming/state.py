@@ -1,8 +1,12 @@
 """Keyed session state kernel — the heart of the CEP engine.
 
 Re-expresses the reference's per-job incremental fold
-(backend-service/handlers/handlers.go:231-304) as an
-``applyInPandasWithState`` function grouped by ``conv_id``:
+(backend-service/handlers/handlers.go:231-304) as ONE
+``applyInPandasWithState`` function, ``bucket_fold``, grouped by
+``bucket = pmod(xxhash64(conv_id), n_buckets)``. Each bucket's state row
+holds a dict conv_id → session state, so python crossings per batch
+scale with buckets, not conversations (applyInPandasWithState costs
+~1-3 ms of serializer overhead per KEY per batch). Per conversation:
 
 - dedup by turn_idx against state (A2; ref scans DetailedResults O(n) per
   message, handlers.go:247-256 — we keep a seen-set, vectorized isin)
@@ -20,15 +24,17 @@ Spark guarantees per-key serial execution partitioned across the cluster,
 replacing the reference's global mutex (handlers.go:28,219-221) that
 serialized ALL jobs through one lock.
 
-Output is a union stream: per-turn pass-through rows (row_type='turn')
-plus one summary row per session close (row_type='summary', fields packed
-in ``summary_json`` and expanded JVM-side in the sink — keeps the per-key
-Python down to one vectorized ``assign``).
+Output (unified mode) is a union stream: per-turn pass-through rows
+(row_type='turn'|'error') plus one summary row per session close
+(row_type='summary', fields packed in ``summary_json`` and expanded
+JVM-side in the sink). The cascade mode runs the same fold with turn
+pass-through off and emits ``(conv_id, summary_json)`` only.
 
-Performance note: the per-key cost here is deliberately O(batch rows for
-this key) with ~4 pandas ops — measured ~0.5 ms/key against Spark's own
-~1 ms/key group-slicing floor. A completed session keeps a tombstone
-state (with its seen-set) until the watermark passes, so at-least-once
+Timeouts: each bucket re-arms its timer to watermark+1s every batch and
+expires, on every invocation, the conversations whose
+last_activity + gap fell behind the watermark — a per-bucket timer wheel
+replacing 10^5 individual per-key timers. A completed session keeps a
+slim tombstone state until the watermark passes, so at-least-once
 redelivery after completion neither re-emits turns nor spawns a second
 session.
 """
@@ -82,25 +88,6 @@ SUMMARY_JSON_SCHEMA = (
     " processing_time_ms:double, completed_at:timestamp>"
 )
 
-# Keyed state: counters + seen-set + label grouping (JSON) + per-failed-
-# turn attempt counters (JSON dict turn_idx -> retries; failed turns only,
-# so the field stays tiny on healthy streams).
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("n_expected", T.IntegerType()),
-        T.StructField("classified", T.IntegerType()),
-        T.StructField("unknown", T.IntegerType()),
-        T.StructField("failed", T.IntegerType()),  # T6 per-session error count
-        T.StructField("sum_cents", T.DoubleType()),  # exact integer-valued
-        T.StructField("max_ts_us", T.LongType()),
-        T.StructField("model_used", T.StringType()),
-        T.StructField("seen", T.ArrayType(T.IntegerType())),
-        T.StructField("labels_json", T.StringType()),
-        T.StructField("done", T.BooleanType()),
-        T.StructField("retries_json", T.StringType()),
-    ]
-)
-
 TURN_NAME = "turn-%05d"
 SESSION_GAP_MS = 10 * 60 * 1000  # close-by-timeout gap after last activity
 
@@ -109,13 +96,10 @@ _EMPTY = {c: None for c in _OUT_COLS}
 
 
 def _summary_row(conv_id: str, status: str, st: dict[str, Any]) -> dict[str, Any]:
-    labels: dict[str, list[int]] = (
-        st["labels"] if "labels" in st else json.loads(st["labels_json"])
-    )
     # state stores turn indexes only; the stable name is derived here —
     # half the state-blob JSON and no per-turn formatting in the hot fold
     grouped = {
-        lab: [TURN_NAME % i for i in sorted(idxs)] for lab, idxs in sorted(labels.items())
+        lab: [TURN_NAME % i for i in sorted(idxs)] for lab, idxs in sorted(st["labels"].items())
     }
     payload = {
         "status": status,
@@ -153,179 +137,13 @@ def _null_unless(err_mask: "np.ndarray") -> "pd.arrays.IntegerArray":
     )
 
 
-def session_fold(
-    key: tuple[str],
-    pdfs: Iterable[pd.DataFrame],
-    state,
-) -> Iterable[pd.DataFrame]:
-    """The per-conversation fold. ``state`` is a pyspark GroupState."""
-    (conv_id,) = key
-
-    if state.hasTimedOut:
-        st = _state_dict(state.get)
-        state.remove()
-        # done-tombstones expire silently; open sessions close as 'timeout'
-        # (the reference leaves them 'processing' forever, handlers.go:291-299)
-        if not st["done"] and st["seen"]:
-            yield _summary_frame([_summary_row(conv_id, "timeout", st)])
-        return
-
-    if state.exists:
-        st = _state_dict(state.get)
-    else:
-        st = {
-            "n_expected": -1,
-            "classified": 0,
-            "unknown": 0,
-            "failed": 0,
-            "sum_cents": 0,
-            "max_ts_us": 0,
-            "model_used": None,
-            "seen": [],
-            "labels_json": "{}",
-            "done": False,
-            "retries_json": "{}",
-        }
-
-    seen = set(st["seen"])
-    labels: dict[str, list[list]] = json.loads(st["labels_json"])
-    retries: dict[str, int] = json.loads(st["retries_json"])
-    out_parts = []
-
-    for pdf in pdfs:
-        # A2 idempotency dedup under at-least-once delivery: intra-batch
-        # via drop_duplicates, cross-batch via the state seen-set
-        pdf = pdf.drop_duplicates("turn_idx")
-        if seen:
-            dup = pdf["turn_idx"].isin(seen)
-            # cross-batch redelivery of a FAILED turn: bump its attempt
-            # counter and log the attempt as another error row (counters
-            # and completion are untouched — the turn already counted)
-            re_err = pdf[dup.to_numpy() & pdf["error_reason"].notna().to_numpy()]
-            if not re_err.empty and not st["done"]:
-                bumps = []
-                for i in re_err["turn_idx"]:
-                    k = str(int(i))
-                    retries[k] = retries.get(k, 0) + 1
-                    bumps.append(retries[k])
-                out_parts.append(
-                    re_err.assign(
-                        row_type="error",
-                        summary_json=None,
-                        retry_count=pd.array(bumps, dtype="Int32"),
-                    )
-                )
-            pdf = pdf[~dup]
-        if st["done"] or pdf.empty:
-            continue
-        idxs = pdf["turn_idx"].to_numpy()
-        preds = pdf["top_prediction"].to_numpy()
-        err = pdf["error_reason"].notna().to_numpy()
-        seen.update(int(i) for i in idxs)
-        for i in idxs[err]:
-            retries.setdefault(str(int(i)), 0)
-        # Unconfigured conversations arrive with null n_turns via the left
-        # config join (engine.py); they stay open until the session timeout.
-        # Mirror the bucket-fold guard (NaN != NaN).
-        nexp = pdf["n_turns"].iloc[0]
-        st["n_expected"] = int(nexp) if nexp is not None and nexp == nexp else -1
-        st["model_used"] = pdf["model_used"].iloc[0]
-        # T6: failed rows count toward total/completion, never into
-        # classified/unknown or the label grouping
-        nfail = int(err.sum())
-        unk = int(((preds == "unknown") & ~err).sum())
-        st["classified"] += len(preds) - unk - nfail
-        st["unknown"] += unk
-        st["failed"] += nfail
-        # ROUNDING PRECONDITION (holds for all three cents conversions:
-        # pandas .round here, np.rint in the bucket fold, F.round/round()
-        # in the batch twin + DuckDB oracles): pandas/numpy round
-        # half-to-even, Spark/DuckDB round half-away — they agree ONLY
-        # because ms*100 never lands exactly on .5 (the kernel emits
-        # n_tok * 0.05, so ms*100 ≈ n_tok*5 ± float epsilon, never a
-        # half-cent). Any new time source must keep this property or
-        # switch every site to one explicit rule (e.g. floor(x*100+0.5)).
-        st["sum_cents"] += int(pdf["processing_time_ms"].mul(100).round().sum())
-        st["max_ts_us"] = max(st["max_ts_us"], int(pdf["ts"].max().value // 1000))
-        for i, p in zip(idxs[~err], preds[~err]):
-            labels.setdefault(p, []).append(int(i))
-        # single vectorized pass-through: input columns + constants (the
-        # retry counter is 0 on a first-attempt error, null on turns).
-        # Nullable Int32, NOT np.where(err, 0, None): an object-dtype
-        # column would box one PyObject per output row on the hot path
-        out_parts.append(
-            pdf.assign(
-                row_type=np.where(err, "error", "turn"),
-                summary_json=None,
-                retry_count=_null_unless(err),
-            )
-        )
-
-    if out_parts:
-        yield out_parts[0] if len(out_parts) == 1 else pd.concat(out_parts)
-
-    st["seen"] = sorted(seen)
-    st["labels_json"] = json.dumps(labels, sort_keys=True)
-    st["retries_json"] = json.dumps(retries, sort_keys=True)
-
-    complete = st["n_expected"] > 0 and len(seen) >= st["n_expected"]
-    if complete and not st["done"]:
-        st["done"] = True
-        yield _summary_frame([_summary_row(conv_id, "completed", st)])
-        # tombstone retained until the watermark expires it, but SLIM:
-        # post-completion redelivery dedups on the done flag alone, so the
-        # seen-set, label grouping and retry counters are dead weight in
-        # every later state-store round-trip
-        st["seen"] = []
-        st["labels_json"] = "{}"
-        st["retries_json"] = "{}"
-
-    state.update(_state_tuple(st))
-    # session-window close semantics: time out once the event-time
-    # watermark passes last activity + gap (T3/T4). EventTimeTimeout
-    # requires a timestamp strictly beyond the current watermark.
-    wm = state.getCurrentWatermarkMs()
-    last_activity_ms = st["max_ts_us"] // 1000
-    state.setTimeoutTimestamp(max(last_activity_ms + SESSION_GAP_MS, wm + 1000))
-
-
-# ---------------------------------------------------------------------------
-# Bucketed fold — the high-cardinality-scale variant.
-#
-# applyInPandasWithState costs ~1-3 ms of serializer overhead per KEY per
-# batch (pandas slicing + Arrow state round-trip). With 10^5-10^8 live
-# conversations that per-key tax dominates the pipeline and caps scaling
-# efficiency. The bucketed fold keys the state op by
-# pmod(xxhash64(conv_id), n_buckets) and keeps a dict conv_id → session
-# state inside each bucket's state row: python crossings per batch drop
-# from #conversations to #buckets, while per-conversation semantics
-# (dedup, counters, grouping, completion, timeout, tombstones) stay
-# EXACTLY the same — verified by the batch≡stream and invariance tests
-# running against both folds.
-#
-# Timeouts: each bucket re-arms its timer to watermark+1s every batch and
-# expires, on every invocation, the conversations whose
-# last_activity + gap fell behind the watermark — a per-bucket timer wheel
-# replacing 10^5 individual per-key timers.
-# ---------------------------------------------------------------------------
-
+# One state row per bucket: a JSON blob {"version": STATE_FORMAT_VERSION,
+# "convs": {conv_id: session state}}.
 BUCKET_STATE_SCHEMA = T.StructType([T.StructField("states_json", T.StringType())])
 
-# Slim fold input for the cascade's summary query (Q2): no text / no
-# prediction payload — those never enter Python state (Arrow string
-# materialization of the payload was the measured CPU hot spot).
-SLIM_FOLD_INPUT = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("top_prediction", T.StringType()),
-        T.StructField("processing_time_ms", T.DoubleType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("model_used", T.StringType()),
-        T.StructField("error_reason", T.StringType()),
-        T.StructField("n_turns", T.IntegerType()),
-    ]
-)
+# Bump on any change to the blob or per-conversation state layout. Version
+# 1 was the unversioned bare {conv_id: state} dict.
+STATE_FORMAT_VERSION = 2
 
 SUMMARY_OUTPUT = T.StructType(
     [
@@ -367,7 +185,6 @@ def _expire_due(states: dict[str, dict], wm_ms: int) -> list[dict[str, Any]]:
     return out
 
 
-
 def _fold_one_pdf(
     pdf: pd.DataFrame,
     states: dict[str, dict],
@@ -377,11 +194,9 @@ def _fold_one_pdf(
     emit_turns: bool = True,
 ) -> pd.DataFrame | None:
     """Fold ONE micro-batch slice into the bucket's per-conversation
-    states (shared by the applyInPandasWithState and transformWithState
-    bucket folds). Mutates states/seen_keys/done_convs/summaries; returns
-    the per-turn pass-through frame (row_type turn|error) or None."""
-    # transformWithState strips the grouping column before the processor;
-    # applyInPandasWithState keeps it — tolerate both
+    states. Mutates states/seen_keys/done_convs/summaries; returns the
+    per-turn pass-through frame (row_type turn|error) or None."""
+    # the grouping column is not part of FOLD_OUTPUT
     pdf = pdf.drop(columns=["bucket"], errors="ignore").drop_duplicates(["conv_id", "turn_idx"])
     retry_out = None
     if seen_keys:
@@ -446,9 +261,13 @@ def _fold_one_pdf(
     err_arr = pdf["error_reason"].notna().to_numpy()
     unk_arr = ((pred_arr == "unknown") & ~err_arr).astype("int64")
     fail_arr = err_arr.astype("int64")
-    # np.rint is half-to-even; bit-matches the HALF_UP sites only under the
-    # no-exact-half-cent precondition documented at session_fold's
-    # sum_cents accumulation
+    # ROUNDING PRECONDITION (holds for all cents conversions: np.rint
+    # here, F.round/round() in the batch twin + DuckDB oracles): numpy
+    # rounds half-to-even, Spark/DuckDB round half-away — they agree ONLY
+    # because ms*100 never lands exactly on .5 (the kernel emits
+    # n_tok * 0.05, so ms*100 ≈ n_tok*5 ± float epsilon, never a
+    # half-cent). Any new time source must keep this property or switch
+    # every site to one explicit rule (e.g. floor(x*100+0.5)).
     ms_arr = np.rint(pdf["processing_time_ms"].to_numpy() * 100).astype("int64")
     ts_arr = pdf["ts"].astype("datetime64[ns]").astype("int64").to_numpy() // 1000
     nexp_arr = pdf["n_turns"].to_numpy()
@@ -497,139 +316,57 @@ def _fold_one_pdf(
     return out
 
 
-def bucket_session_fold(
-    key: tuple[int],
-    pdfs: Iterable[pd.DataFrame],
-    state,
-) -> Iterable[pd.DataFrame]:
-    """Per-bucket fold: same per-conversation semantics as session_fold,
-    one state row per bucket."""
-    wm_ms = state.getCurrentWatermarkMs()
-
-    if state.hasTimedOut:
-        states = json.loads(state.get[0])
-        expired = _expire_due(states, wm_ms)
-        if expired:
-            yield _summary_frame(expired)
-        if states:
-            state.update((json.dumps(states, sort_keys=True),))
-            state.setTimeoutTimestamp(wm_ms + 1000)
-        else:
-            state.remove()
-        return
-
-    states = json.loads(state.get[0]) if state.exists else {}
-    # cross-batch dedup set: "conv|idx" keys of everything already folded
-    seen_keys = {f"{cid}|{i}" for cid, st in states.items() for i in st["seen"]}
-    done_convs = {cid for cid, st in states.items() if st["done"]}
-
-    summaries = []
-    for pdf in pdfs:
-        out = _fold_one_pdf(pdf, states, seen_keys, done_convs, summaries)
-        if out is not None:
-            yield out
-
-    summaries.extend(_expire_due(states, wm_ms))
-    if summaries:
-        yield _summary_frame(summaries)
-
-    if states:
-        state.update((json.dumps(states, sort_keys=True),))
-        state.setTimeoutTimestamp(wm_ms + 1000)
-    elif state.exists:
-        state.remove()
-
-
-def _summary_only_frame(rows: list[dict[str, Any]]) -> pd.DataFrame:
-    return pd.DataFrame(
-        [{"conv_id": r["conv_id"], "summary_json": r["summary_json"]} for r in rows],
-        columns=["conv_id", "summary_json"],
-    )
-
-
-def bucket_summary_fold(
-    key: tuple[int],
-    pdfs: Iterable[pd.DataFrame],
-    state,
-) -> Iterable[pd.DataFrame]:
-    """Cascade Q2 fold: same per-conversation session semantics as
-    bucket_session_fold but input is the SLIM per-turn record (no payload)
-    and output is summaries only — the per-turn stream already landed via
-    the stateless exactly-once path (Q1)."""
-    wm_ms = state.getCurrentWatermarkMs()
-
-    if state.hasTimedOut:
-        states = json.loads(state.get[0])
-        expired = _expire_due(states, wm_ms)
-        if expired:
-            yield _summary_only_frame(expired)
-        if states:
-            state.update((json.dumps(states, sort_keys=True),))
-            state.setTimeoutTimestamp(wm_ms + 1000)
-        else:
-            state.remove()
-        return
-
-    states = json.loads(state.get[0]) if state.exists else {}
-    seen_keys = {f"{cid}|{i}" for cid, st in states.items() for i in st["seen"]}
-    done_convs = {cid for cid, st in states.items() if st["done"]}
-
-    summaries = []
-    for pdf in pdfs:
-        _fold_one_pdf(pdf, states, seen_keys, done_convs, summaries, emit_turns=False)
-
-    summaries.extend(_expire_due(states, wm_ms))
-    if summaries:
-        yield _summary_only_frame(summaries)
-
-    if states:
-        state.update((json.dumps(states, sort_keys=True),))
-        state.setTimeoutTimestamp(wm_ms + 1000)
-    elif state.exists:
-        state.remove()
-
-
-def _state_dict(tup) -> dict[str, Any]:
-    # STATE FORMAT VERSION GUARD: round 3 grew the schema to 11 fields
-    # (retries_json) — resuming from a checkpoint written by an older
-    # engine build would silently misread the tuple. Fail with an
-    # actionable message instead (a pre-release engine does not carry
-    # cross-version checkpoint migration; restart from a fresh checkpoint
-    # or replay the input — the sink is idempotent under replay).
-    if len(tup) != len(STATE_SCHEMA):
+def _load_states(state) -> dict[str, dict]:
+    if not state.exists:
+        return {}
+    blob = json.loads(state.get[0])
+    version = blob.get("version", 1)
+    if version != STATE_FORMAT_VERSION:
+        # a pre-release engine carries no cross-version checkpoint
+        # migration; misreading the blob would corrupt every summary
         raise RuntimeError(
-            f"session-fold state has {len(tup)} fields, engine expects "
-            f"{len(STATE_SCHEMA)} — this checkpoint was written by an "
-            "older/newer engine build (state format changed in r3: "
-            "+retries_json). Delete the checkpoint dir and replay the "
-            "input; the batch-id-overwrite sink makes replay idempotent."
+            f"bucket-fold state has format version {version}, engine "
+            f"expects {STATE_FORMAT_VERSION}: this checkpoint was written by "
+            "an older/newer engine build. Delete the checkpoint dir and "
+            "replay the input; the batch-id-overwrite sink makes replay "
+            "idempotent."
         )
-    return {
-        "n_expected": tup[0],
-        "classified": tup[1],
-        "unknown": tup[2],
-        "failed": tup[3],
-        "sum_cents": int(tup[4]),
-        "max_ts_us": tup[5],
-        "model_used": tup[6],
-        "seen": list(tup[7]) if tup[7] is not None else [],
-        "labels_json": tup[8] or "{}",
-        "done": bool(tup[9]),
-        "retries_json": tup[10] or "{}",
-    }
+    return blob["convs"]
 
 
-def _state_tuple(st: dict[str, Any]) -> tuple:
-    return (
-        st["n_expected"],
-        st["classified"],
-        st["unknown"],
-        st["failed"],
-        float(st["sum_cents"]),
-        st["max_ts_us"],
-        st["model_used"],
-        st["seen"],
-        st["labels_json"],
-        st["done"],
-        st["retries_json"],
-    )
+def bucket_fold(
+    key: tuple[int],
+    pdfs: Iterable[pd.DataFrame],
+    state,
+    emit_turns: bool = True,
+) -> Iterable[pd.DataFrame]:
+    """The per-bucket session fold; ``state`` is a pyspark GroupState.
+
+    ``emit_turns=True`` (unified): turn/error rows pass through and
+    summaries come out as FOLD_OUTPUT rows. ``emit_turns=False`` (cascade
+    Q2): the input is the slim per-turn record and only SUMMARY_OUTPUT
+    ``(conv_id, summary_json)`` rows come out — the per-turn stream already
+    landed via the stateless exactly-once path (Q1)."""
+    wm_ms = state.getCurrentWatermarkMs()
+    states = _load_states(state)
+
+    summaries: list[dict[str, Any]] = []
+    if not state.hasTimedOut:
+        # cross-batch dedup set: "conv|idx" keys of everything already folded
+        seen_keys = {f"{cid}|{i}" for cid, st in states.items() for i in st["seen"]}
+        done_convs = {cid for cid, st in states.items() if st["done"]}
+        for pdf in pdfs:
+            out = _fold_one_pdf(pdf, states, seen_keys, done_convs, summaries, emit_turns)
+            if out is not None:
+                yield out
+
+    summaries.extend(_expire_due(states, wm_ms))
+    if summaries:
+        frame = _summary_frame(summaries)
+        yield frame if emit_turns else frame[SUMMARY_OUTPUT.fieldNames()]
+
+    if states:
+        state.update((json.dumps({"version": STATE_FORMAT_VERSION, "convs": states}, sort_keys=True),))
+        state.setTimeoutTimestamp(wm_ms + 1000)
+    elif state.exists:
+        state.remove()

@@ -10,17 +10,22 @@ and completion summaries as one clean in-order batch.
 
 from __future__ import annotations
 
+import json
 import random
 
 import numpy as np
 import pandas as pd
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from distributed_classification_system_spark.functions.kernel import score_text
 from distributed_classification_system_spark.streaming.state import (
+    STATE_FORMAT_VERSION,
     _expire_due,
     _fold_one_pdf,
+    _new_conv_state,
+    bucket_fold,
 )
 
 LABELS = ["dog", "cat", "bird"]
@@ -151,6 +156,66 @@ def test_expiry_emits_timeout_only_for_open_sessions(delivery):
     assert states == {}  # all state expired
     # timeout summaries only for conversations that had NOT completed
     assert {r["conv_id"] for r in expired}.isdisjoint(completed)
+
+
+class _FakeGroupState:
+    """The slice of pyspark's GroupState that bucket_fold uses."""
+
+    def __init__(self, blob: str | None = None):
+        self.blob = blob
+        self.hasTimedOut = False
+
+    @property
+    def exists(self) -> bool:
+        return self.blob is not None
+
+    @property
+    def get(self) -> tuple:
+        return (self.blob,)
+
+    def update(self, row: tuple) -> None:
+        (self.blob,) = row
+
+    def remove(self) -> None:
+        self.blob = None
+
+    def getCurrentWatermarkMs(self) -> int:
+        return 0
+
+    def setTimeoutTimestamp(self, ts: int) -> None:
+        pass
+
+
+def _fold_bucket(rows: list[dict], state: _FakeGroupState, emit_turns: bool = True):
+    return list(bucket_fold((0,), iter([_turns_frame(rows)]), state, emit_turns))
+
+
+def test_bucket_fold_state_format_version():
+    """A checkpointed bucket blob from another state format fails loudly
+    with the recovery recipe; a current-version blob resumes exactly."""
+    rows = [
+        {"conv_id": "conv-0", "turn_idx": i, "pred": "dog", "ms": 0.5,
+         "ts": 1_700_000_000 + i, "n_turns": 4}
+        for i in range(4)
+    ]
+    unversioned = json.dumps({"conv-0": _new_conv_state()})  # the version-1 blob
+    for blob in (unversioned, json.dumps({"version": STATE_FORMAT_VERSION + 1, "convs": {}})):
+        with pytest.raises(RuntimeError, match="Delete the checkpoint dir and replay the input"):
+            _fold_bucket(rows, _FakeGroupState(blob))
+
+    for emit_turns in (True, False):
+        state = _FakeGroupState()
+        assert len(_fold_bucket(rows[:2], state, emit_turns)) == int(emit_turns)
+        assert json.loads(state.blob)["version"] == STATE_FORMAT_VERSION
+        # resume from the saved blob; turn 1 is a redelivery
+        *turns, summaries = _fold_bucket(rows[1:], _FakeGroupState(state.blob), emit_turns)
+        summary = json.loads(summaries["summary_json"].iloc[0])
+        assert (summary["status"], summary["total"], summary["classified"]) == ("completed", 4, 4)
+        if emit_turns:
+            assert list(turns[0]["turn_idx"]) == [2, 3]
+        else:
+            assert turns == []
+            assert list(summaries.columns) == ["conv_id", "summary_json"]
 
 
 @given(

@@ -5,7 +5,8 @@
 - at-least-once redelivery → exactly-once sink (zero duplicate keys)
 - kill-and-resume from checkpoint with zero duplicates
 - late data beyond watermark → session closes via timeout, not never
-- hot-conversation salting invariance
+- a hot conversation completes in full and matches the batch twin
+- unknown run modes are rejected
 """
 
 from __future__ import annotations
@@ -219,49 +220,28 @@ def test_late_data_times_out_session(spark, tdir):
     assert all(v.status == "completed" for v in others)
 
 
-def test_bucketed_equals_per_conv_fold(spark, tdir):
-    """Differential: the bucketed fold (high-cardinality scale path) and
-    the one-key-per-conversation fold produce identical tables."""
-    out_b = _run(spark, tdir, run_kw={"fold_buckets": 16}, sub="bucketed")
-    out_p = _run(spark, tdir, run_kw={"fold_buckets": 0}, sub="perconv")
-    tb = {(r.conv_id, r.turn_idx): (r.text, r.top_prediction, r.top_confidence)
-          for r in eng.read_turn_results(spark, out_b).collect()}
-    tp = {(r.conv_id, r.turn_idx): (r.text, r.top_prediction, r.top_confidence)
-          for r in eng.read_turn_results(spark, out_p).collect()}
-    assert tb == tp
-    assert _summary_key(eng.read_conv_summaries(spark, out_b).collect()) == _summary_key(
-        eng.read_conv_summaries(spark, out_p).collect()
-    )
-
-
-def test_streaming_salting_invariance(spark, tdir):
-    """T10: hot conversation (500 turns) — salted vs unsalted runs produce
-    identical results."""
+def test_streaming_hot_conversation(spark, tdir):
+    """T10: a hot conversation (500 turns) completes in full, and the
+    run's summaries equal the batch twin on the same input."""
     kw = {"n_hot": 1, "hot_turns": 500}
-    out_salted = _run(spark, tdir, gen_kw=kw, run_kw={"salt_buckets": 8}, sub="salted")
-    out_plain = _run(spark, tdir, gen_kw=kw, run_kw={"salt_buckets": 0}, sub="plain")
-    a = _summary_key(eng.read_conv_summaries(spark, out_salted).collect())
-    b = _summary_key(eng.read_conv_summaries(spark, out_plain).collect())
-    assert a == b
-    assert a["conv-00000000"][1] == 500  # the hot conv completed in full
+    out = _run(spark, tdir, gen_kw=kw, sub="hot")
+    got = _summary_key(eng.read_conv_summaries(spark, out).collect())
+    assert got["conv-00000000"][:2] == ("completed", 500)
+    t = gen_transcripts(spark, N, **kw)
+    cfg = gen_conv_config(spark, N, **kw)
+    reg = gen_label_registry(spark)
+    assert got == _summary_key(conv_summaries(classify_turns(t, cfg, reg), cfg).collect())
 
 
-def test_tws_fold_equals_unified(spark, tdir):
-    """transformWithState fold ≡ applyInPandasWithState fold (Spark 4
-    next-gen stateful API differential). Auto-skips where google.protobuf
-    (the transformWithState state protocol) is not installed."""
-    from distributed_classification_system_spark.streaming.tws import tws_available
-
-    if not tws_available():
-        pytest.skip("google.protobuf not installed: transformWithState unavailable")
-    out_tws = _run(spark, tdir, sub="tws", run_kw={"mode": "tws"})
-    out_uni = _run(spark, tdir, sub="uni", run_kw={"mode": "unified"})
-    assert _summary_key(eng.read_conv_summaries(spark, out_tws).collect()) == _summary_key(
-        eng.read_conv_summaries(spark, out_uni).collect()
-    )
-    ta = eng.read_turn_results(spark, out_tws).drop("batch_id", "part_id")
-    tb = eng.read_turn_results(spark, out_uni).drop("batch_id", "part_id")
-    assert ta.exceptAll(tb).count() == 0 and tb.exceptAll(ta).count() == 0
+def test_run_stream_rejects_unknown_mode(spark, tdir):
+    """A misspelt mode must fail, not silently run another pipeline; so
+    must cascade without await_termination (it chains two queries)."""
+    cfg = gen_conv_config(spark, 2)
+    reg = gen_label_registry(spark)
+    with pytest.raises(ValueError, match="unknown mode 'unifed'"):
+        eng.run_stream(spark, tdir, tdir, cfg, reg, mode="unifed", await_termination=True)
+    with pytest.raises(ValueError, match="await_termination"):
+        eng.run_stream(spark, tdir, tdir, cfg, reg, mode="cascade")
 
 
 def _rollup_expected(spark, out, window, slide=None):
