@@ -486,7 +486,7 @@ def _stream_fold_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         eng.write_stream_fixture(transcripts, inp, n_files=4)
         eng.run_stream(
             spark, inp, out, config, registry,
-            max_files_per_trigger=1, fold_buckets=32, await_termination=True,
+            max_files_per_trigger=1, await_termination=True,
         )
         streamed = (
             eng.read_conv_summaries(spark, out)
@@ -535,7 +535,7 @@ def _stream_pipeline(spark: SparkSession, mode: str = "unified") -> DataFrame:
         eng.write_stream_fixture(transcripts, inp, n_files=3)
         eng.run_stream(
             spark, inp, out, config, registry,
-            max_files_per_trigger=1, fold_buckets=32, await_termination=True,
+            max_files_per_trigger=1, await_termination=True,
             mode=mode,
         )
         streamed = (

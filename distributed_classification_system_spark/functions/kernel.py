@@ -243,10 +243,11 @@ def make_registry_classify_udf(labels_by_job: dict[str, list[str]]):
     REGISTRY (a tiny static dim) is captured in the closure keyed by
     job_type, so the per-row ``labels`` array column — 5-20 strings per
     row, pure payload to the Python boundary — never crosses Arrow (guide
-    §4.1). The stream still broadcast-joins the registry for model_name
-    and for the inner-join row-dropping semantics; only the label payload
-    moves out of the row. Output is identical to the 4-arg classify_udf
-    fed by the registry join."""
+    §4.1). The stream takes model_name and the unregistered-job_type
+    filter from the same collected registry as plan constants
+    (streaming.engine._registry_constants), so no registry column rides
+    the row. Output is identical to the 4-arg classify_udf fed by a
+    registry join."""
     import numpy as np
 
     by_job = {j: sorted(ls) for j, ls in labels_by_job.items()}

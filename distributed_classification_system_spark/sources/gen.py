@@ -209,8 +209,9 @@ def gen_transcripts(
 
 
 def gen_label_registry(spark: SparkSession) -> DataFrame:
-    """Static model/label dimension (FIXTURES.md §2) — broadcast side of the
-    stream-static join (reference dispatch:
+    """Static model/label dimension (FIXTURES.md §2) — broadcast-joined by
+    the batch path, compiled into the plan as constants by the stream
+    (reference dispatch:
     ml-service/controllers/classification_controller.py:77-80)."""
     rows = [
         ("image_classification", "det-count-v1-imagenet", IMAGE_LABELS, "a photo of %s"),

@@ -3,7 +3,8 @@
 Pipeline (one streaming query, one state store, one shuffle, one write):
 
     readStream(transcripts) ──watermark(ts)──▶ broadcast stream-static
-      joins (conv_config on conv_id, label registry on job_type)
+      join (conv_config on conv_id) ──▶ label registry as plan constants
+      (job_type IN filter + model_name literal map, collected once per run)
       ──▶ vectorized classification on scan partitions (Arrow pandas UDF,
           K1-K6/P6 — no shuffle before the kernel)
       ──▶ exchange on bucket = hash(conv_id) % B
@@ -45,7 +46,14 @@ from distributed_classification_system_spark.streaming.state import (
 )
 
 WATERMARK_DELAY = "5 minutes"
-DEFAULT_FOLD_BUCKETS = 256
+# Every bucket is one Python group crossing per micro-batch, and every
+# bucket holding state wakes again in the empty watermark batch; total
+# state bytes do not depend on the count. With 4 shuffle partitions,
+# 16/32/64 measured within noise of each other and faster than 256 on
+# both benchmark workloads; 16 puts the fewest keys on a state task
+# (BENCH/BASELINE.md, "Per-micro-batch fixed cost"). The count is pinned
+# in checkpointed state (state.bucket_fold).
+DEFAULT_FOLD_BUCKETS = 16
 
 
 def _config_join(df: DataFrame, conv_config: DataFrame, broadcast_config: bool) -> DataFrame:
@@ -76,6 +84,24 @@ def _config_join(df: DataFrame, conv_config: DataFrame, broadcast_config: bool) 
     return df.join(cfg.hint("shuffle_hash"), "conv_id", "left")
 
 
+def _registry_constants(registry: DataFrame) -> tuple[dict[str, str], dict[str, list[str]]]:
+    """Collect the label registry (a tiny static dim) to the driver as
+    ``job_type → model_name`` and ``job_type → labels``. A job_type must
+    name one model: a duplicate raises, where a join would have duplicated
+    every turn row of that job_type. Null job_types are skipped — they
+    never matched the join key either."""
+    model_by_job: dict[str, str] = {}
+    labels_by_job: dict[str, list[str]] = {}
+    for job_type, model_name, labels in registry.select("job_type", "model_name", "labels").collect():
+        if job_type is None:
+            continue
+        if job_type in model_by_job:
+            raise ValueError(f"label registry has more than one row for job_type {job_type!r}")
+        model_by_job[job_type] = model_name
+        labels_by_job[job_type] = list(labels)
+    return model_by_job, labels_by_job
+
+
 def classified_stream(
     stream: DataFrame,
     conv_config: DataFrame,
@@ -84,14 +110,16 @@ def classified_stream(
     dedup_within_watermark: bool = False,
     broadcast_config: bool = True,
 ) -> DataFrame:
-    """watermark → [native dedup] → stream-static joins → kernel
-    (scan-partition parallel).
+    """watermark → [native dedup] → conv_config join → registry
+    constants → kernel (scan-partition parallel).
 
-    The registry always broadcasts (tiny); the conv_config join has two
-    scales — see _config_join. With the default broadcast the kernel runs
-    on scan partitions with NO shuffle before it; the only shuffle in the
-    whole pipeline is the bucket exchange feeding the keyed fold, so a
-    hot conversation's kernel work spreads by scan partition."""
+    The registry is collected once per call and compiled into the plan
+    (see _registry_constants), so it launches no per-batch job; the
+    conv_config join has two scales — see _config_join. With the default
+    broadcast the kernel runs on scan partitions with NO shuffle before
+    it; the only shuffle in the whole pipeline is the bucket exchange
+    feeding the keyed fold, so a hot conversation's kernel work spreads by
+    scan partition."""
     df = stream.withWatermark("ts", watermark)
     if dedup_within_watermark:
         # native JVM stateful dedup — the at-least-once redelivery guard
@@ -107,12 +135,19 @@ def classified_stream(
         .withColumn("top_k", F.coalesce("top_k", F.lit(5)))
         .withColumn("confidence_threshold", F.coalesce("confidence_threshold", F.lit(0.5)))
     )
-    # the registry broadcast join keeps the K7 dispatch semantics (inner
-    # join drops unregistered job_types, model_name rides the row); the
-    # label ARRAYS leave the row — they go to the kernel via closure
-    # (make_registry_classify_udf), so 5-20 strings/row of pure payload
-    # never cross the Python boundary (guide §4.1)
-    df = df.join(F.broadcast(registry.select("job_type", "model_name")), "job_type")
+    # K7 dispatch: the registry is collected once per call and enters the
+    # plan as constants — an IN filter keeps the inner join's semantics
+    # (unregistered job_types drop) and a literal map supplies model_name,
+    # so no micro-batch launches a registry broadcast job. The label
+    # ARRAYS go to the kernel via closure (make_registry_classify_udf), so
+    # 5-20 strings/row of pure payload never cross the Python boundary
+    # (guide §4.1)
+    model_by_job, labels_by_job = _registry_constants(registry)
+    df = df.filter(F.col("job_type").isin(list(model_by_job)))
+    pairs = [F.lit(v) for kv in model_by_job.items() for v in kv]
+    model_used = (
+        F.create_map(*pairs)[F.col("job_type")] if pairs else F.lit(None).cast("string")
+    )
     # T6 dead-letter tag: one codegen'd CASE per row; tagged rows still ride
     # the same query (kernel is null-safe) and exit as row_type='error'
     df = df.withColumn("error_reason", error_reason_expr())
@@ -120,10 +155,6 @@ def classified_stream(
         make_registry_classify_udf,
     )
 
-    labels_by_job = {
-        r["job_type"]: list(r["labels"])
-        for r in registry.select("job_type", "labels").collect()
-    }
     kern = make_registry_classify_udf(labels_by_job)
     res = kern(F.col("text"), F.col("job_type"), F.col("top_k"), F.col("confidence_threshold"))
     return df.select(
@@ -133,7 +164,7 @@ def classified_stream(
         "text",
         "tool",
         "ts",
-        F.col("model_name").alias("model_used"),
+        model_used.alias("model_used"),
         res.alias("r"),
         "error_reason",
         "n_turns",
@@ -164,7 +195,7 @@ def folded_stream(
     state.bucket_fold)."""
     bucketed = df.withColumn("bucket", F.pmod(F.xxhash64("conv_id"), F.lit(fold_buckets)))
     return bucketed.groupBy("bucket").applyInPandasWithState(
-        functools.partial(bucket_fold, emit_turns=emit_turns),
+        functools.partial(bucket_fold, n_buckets=fold_buckets, emit_turns=emit_turns),
         outputStructType=FOLD_OUTPUT if emit_turns else SUMMARY_OUTPUT,
         stateStructType=BUCKET_STATE_SCHEMA,
         outputMode="append",
@@ -340,7 +371,7 @@ def run_stream(
     availableNow queries —
 
       Q1  transcripts → watermark → dropDuplicatesWithinWatermark (native
-          JVM dedup) → config/registry broadcast joins → kernel →
+          JVM dedup) → config join + registry constants → kernel →
           batch-overwrite turn sink. The heavy payload (text, prediction
           arrays) stays JVM-side end to end; Python only sees it once,
           inside the Arrow kernel.

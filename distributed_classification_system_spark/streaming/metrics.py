@@ -35,7 +35,9 @@ class MetricsListener(StreamingQueryListener):
             "turns_per_sec": p.processedRowsPerSecond,
             "state_rows": state.numRowsTotal if state is not None else None,
             "watermark": (p.eventTime or {}).get("watermark"),
-            "num_partitions": None,
+            # the state operator's shuffle partitions: the count the
+            # checkpoint pinned at its first run, not the session setting
+            "num_partitions": state.numShufflePartitions if state is not None else None,
         }
         with self._lock:
             self.rows.append(row)

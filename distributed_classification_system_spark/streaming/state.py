@@ -5,8 +5,10 @@ Re-expresses the reference's per-job incremental fold
 ``applyInPandasWithState`` function, ``bucket_fold``, grouped by
 ``bucket = pmod(xxhash64(conv_id), n_buckets)``. Each bucket's state row
 holds a dict conv_id → session state, so python crossings per batch
-scale with buckets, not conversations (applyInPandasWithState costs
-~1-3 ms of serializer overhead per KEY per batch). Per conversation:
+scale with buckets, not conversations (on a 4-core box a stateful key
+costs ~6 ms of serializer and state-store overhead per batch, even
+when its fold only expires timers). The bucket count is pinned in the
+saved state: conv_id → bucket routing depends on it. Per conversation:
 
 - dedup by turn_idx against state (A2; ref scans DetailedResults O(n) per
   message, handlers.go:247-256 — we keep a seen-set, vectorized isin)
@@ -138,12 +140,13 @@ def _null_unless(err_mask: "np.ndarray") -> "pd.arrays.IntegerArray":
 
 
 # One state row per bucket: a JSON blob {"version": STATE_FORMAT_VERSION,
-# "convs": {conv_id: session state}}.
+# "buckets": n_buckets, "convs": {conv_id: session state}}.
 BUCKET_STATE_SCHEMA = T.StructType([T.StructField("states_json", T.StringType())])
 
 # Bump on any change to the blob or per-conversation state layout. Version
-# 1 was the unversioned bare {conv_id: state} dict.
-STATE_FORMAT_VERSION = 2
+# 1 was the unversioned bare {conv_id: state} dict; version 2 carried no
+# bucket count.
+STATE_FORMAT_VERSION = 3
 
 SUMMARY_OUTPUT = T.StructType(
     [
@@ -316,7 +319,13 @@ def _fold_one_pdf(
     return out
 
 
-def _load_states(state) -> dict[str, dict]:
+_REPLAY = (
+    "Delete the checkpoint dir and replay the input; the "
+    "batch-id-overwrite sink makes replay idempotent."
+)
+
+
+def _load_states(state, n_buckets: int) -> dict[str, dict]:
     if not state.exists:
         return {}
     blob = json.loads(state.get[0])
@@ -327,9 +336,16 @@ def _load_states(state) -> dict[str, dict]:
         raise RuntimeError(
             f"bucket-fold state has format version {version}, engine "
             f"expects {STATE_FORMAT_VERSION}: this checkpoint was written by "
-            "an older/newer engine build. Delete the checkpoint dir and "
-            "replay the input; the batch-id-overwrite sink makes replay "
-            "idempotent."
+            f"an older/newer engine build. {_REPLAY}"
+        )
+    if blob.get("buckets") != n_buckets:
+        # conv_id -> bucket routing depends on the count: resuming with
+        # another one would split a conversation across two buckets and
+        # emit duplicate turns and two summaries
+        raise RuntimeError(
+            f"bucket-fold state was written with {blob.get('buckets')} fold "
+            f"buckets, this run uses {n_buckets}: the bucket count cannot "
+            f"change on a checkpoint. {_REPLAY}"
         )
     return blob["convs"]
 
@@ -338,9 +354,12 @@ def bucket_fold(
     key: tuple[int],
     pdfs: Iterable[pd.DataFrame],
     state,
+    n_buckets: int,
     emit_turns: bool = True,
 ) -> Iterable[pd.DataFrame]:
-    """The per-bucket session fold; ``state`` is a pyspark GroupState.
+    """The per-bucket session fold; ``state`` is a pyspark GroupState and
+    ``n_buckets`` the bucket count the conv_id → bucket routing used (it is
+    pinned in the saved state).
 
     ``emit_turns=True`` (unified): turn/error rows pass through and
     summaries come out as FOLD_OUTPUT rows. ``emit_turns=False`` (cascade
@@ -348,7 +367,7 @@ def bucket_fold(
     ``(conv_id, summary_json)`` rows come out — the per-turn stream already
     landed via the stateless exactly-once path (Q1)."""
     wm_ms = state.getCurrentWatermarkMs()
-    states = _load_states(state)
+    states = _load_states(state, n_buckets)
 
     summaries: list[dict[str, Any]] = []
     if not state.hasTimedOut:
@@ -366,7 +385,8 @@ def bucket_fold(
         yield frame if emit_turns else frame[SUMMARY_OUTPUT.fieldNames()]
 
     if states:
-        state.update((json.dumps({"version": STATE_FORMAT_VERSION, "convs": states}, sort_keys=True),))
+        blob = {"version": STATE_FORMAT_VERSION, "buckets": n_buckets, "convs": states}
+        state.update((json.dumps(blob, sort_keys=True),))
         state.setTimeoutTimestamp(wm_ms + 1000)
     elif state.exists:
         state.remove()

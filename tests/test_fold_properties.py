@@ -186,27 +186,38 @@ class _FakeGroupState:
         pass
 
 
-def _fold_bucket(rows: list[dict], state: _FakeGroupState, emit_turns: bool = True):
-    return list(bucket_fold((0,), iter([_turns_frame(rows)]), state, emit_turns))
+def _fold_bucket(
+    rows: list[dict], state: _FakeGroupState, emit_turns: bool = True, n_buckets: int = 16
+):
+    return list(bucket_fold((0,), iter([_turns_frame(rows)]), state, n_buckets, emit_turns))
 
 
 def test_bucket_fold_state_format_version():
-    """A checkpointed bucket blob from another state format fails loudly
-    with the recovery recipe; a current-version blob resumes exactly."""
+    """A checkpointed bucket blob from another state format or another
+    bucket count fails loudly with the recovery recipe; a matching blob
+    resumes exactly."""
     rows = [
         {"conv_id": "conv-0", "turn_idx": i, "pred": "dog", "ms": 0.5,
          "ts": 1_700_000_000 + i, "n_turns": 4}
         for i in range(4)
     ]
-    unversioned = json.dumps({"conv-0": _new_conv_state()})  # the version-1 blob
-    for blob in (unversioned, json.dumps({"version": STATE_FORMAT_VERSION + 1, "convs": {}})):
-        with pytest.raises(RuntimeError, match="Delete the checkpoint dir and replay the input"):
+    convs = {"conv-0": _new_conv_state()}
+    unversioned = json.dumps(convs)  # the version-1 blob
+    v2 = json.dumps({"version": 2, "convs": convs})  # no bucket count
+    future = json.dumps({"version": STATE_FORMAT_VERSION + 1, "buckets": 16, "convs": {}})
+    for blob in (unversioned, v2, future):
+        with pytest.raises(RuntimeError, match="format version .* Delete the checkpoint dir and replay the input"):
             _fold_bucket(rows, _FakeGroupState(blob))
 
     for emit_turns in (True, False):
         state = _FakeGroupState()
         assert len(_fold_bucket(rows[:2], state, emit_turns)) == int(emit_turns)
-        assert json.loads(state.blob)["version"] == STATE_FORMAT_VERSION
+        saved = json.loads(state.blob)
+        assert (saved["version"], saved["buckets"]) == (STATE_FORMAT_VERSION, 16)
+        # the same blob resumed under another bucket count would re-route
+        # conversations: it must raise, not fold
+        with pytest.raises(RuntimeError, match="16 fold buckets, this run uses 32.* Delete the checkpoint dir"):
+            _fold_bucket(rows[1:], _FakeGroupState(state.blob), emit_turns, n_buckets=32)
         # resume from the saved blob; turn 1 is a redelivery
         *turns, summaries = _fold_bucket(rows[1:], _FakeGroupState(state.blob), emit_turns)
         summary = json.loads(summaries["summary_json"].iloc[0])

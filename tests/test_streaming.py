@@ -7,6 +7,8 @@
 - late data beyond watermark → session closes via timeout, not never
 - a hot conversation completes in full and matches the batch twin
 - unknown run modes are rejected
+- the label registry enters the plan as constants (one broadcast left)
+- the metrics table records the state operator's partition count
 """
 
 from __future__ import annotations
@@ -321,6 +323,63 @@ def test_nonbroadcast_config_join_cascade_mode(spark, tdir):
     assert _summary_key(eng.read_conv_summaries(spark, out_b).collect()) == _summary_key(
         eng.read_conv_summaries(spark, out_s).collect()
     )
+
+
+def test_classified_stream_registry_constants(spark):
+    """The registry enters the plan as constants: a conversation whose
+    job_type is not registered drops (the old inner join's semantics),
+    model_used is the registry's model_name, and the only broadcast left
+    is the conv_config one."""
+    from distributed_classification_system_spark.schemas import TRANSCRIPTS
+
+    # plain local relations, so the plan carries no generator joins
+    t = spark.createDataFrame(gen_transcripts(spark, 20).collect(), TRANSCRIPTS)
+    cfg = gen_conv_config(spark, 20)
+    cfg = spark.createDataFrame(cfg.collect(), cfg.schema)
+    orphan = "conv-00000003"
+    cfg = cfg.withColumn(
+        "job_type", F.when(F.col("conv_id") == orphan, "unregistered_job").otherwise(F.col("job_type"))
+    )
+    reg = gen_label_registry(spark)
+    model_by_job = {r.job_type: r.model_name for r in reg.collect()}
+    job_by_conv = {r.conv_id: r.job_type for r in cfg.collect()}
+    want_models = {  # unconfigured conversations default to custom_classification
+        c: model_by_job[job_by_conv.get(c, "custom_classification")]
+        for c in {r.conv_id for r in t.select("conv_id").collect()} - {orphan}
+    }
+
+    got = eng.classified_stream(t, cfg, reg).select("conv_id", "model_used").distinct().collect()
+    assert {r.conv_id: r.model_used for r in got} == want_models
+
+    for broadcast_config, n_broadcasts in ((True, 1), (False, 0)):
+        plan = (
+            eng.classified_stream(t, cfg, reg, broadcast_config=broadcast_config)
+            ._jdf.queryExecution().executedPlan().toString()
+        )
+        assert plan.count("BroadcastExchange") == n_broadcasts, plan
+
+
+def test_registry_duplicate_job_type_raises(spark):
+    """A job_type must name one model: with a join, a duplicate registry
+    row duplicated every turn of that job_type."""
+    from distributed_classification_system_spark.schemas import LABEL_REGISTRY
+
+    reg = gen_label_registry(spark)
+    dup = reg.union(
+        spark.createDataFrame([("custom_classification", "other-model", ["a"], None)], LABEL_REGISTRY)
+    )
+    with pytest.raises(ValueError, match="more than one row for job_type 'custom_classification'"):
+        eng.classified_stream(gen_transcripts(spark, 2), gen_conv_config(spark, 2), dup)
+
+
+def test_run_stream_metrics_num_partitions(spark, tdir):
+    """Every row of the run's metrics table records the state operator's
+    shuffle-partition count, which here is the session's setting."""
+    out = _run(spark, tdir, n_convs=10, n_files=2, sub="metrics")
+    rows = spark.read.parquet(os.path.join(out, "metrics")).collect()
+    assert rows
+    want = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert [r.num_partitions for r in rows] == [want] * len(rows)
 
 
 def test_metrics_write_parquet_matches_spark_schema(spark, tdir):
