@@ -36,15 +36,20 @@ from distributed_classification_system_spark.functions.validate import split_fai
 # no rows are cached; every execution still scans the parquet files — so
 # this only removes repeated driver-side resolution of an immutable input
 # (same discipline as the kernel's _EXPR_CACHE). Keyed per session: a DF
-# from a stopped SparkSession must never leak into a new one.
+# from a stopped SparkSession must never leak into a new one, and the
+# first lookup that finds another session's entry evicts every entry of
+# other sessions, so dead-session DataFrames do not pile up under other keys.
 _T_CACHE: dict[tuple[str, str], tuple[SparkSession, DataFrame]] = {}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     key = (sf_dir, name)
     hit = _T_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
+    if hit is not None:
+        if hit[0] is spark:
+            return hit[1]
+        for k in [k for k, (s, _) in _T_CACHE.items() if s is not spark]:
+            del _T_CACHE[k]
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     _T_CACHE[key] = (spark, df)
     return df

@@ -91,7 +91,10 @@ def gen_conversations(
 
     ``n_hot`` conversations get ``hot_turns`` turns each — the skew fixture
     (reference: one 30k-item job, scripts/submit_large_load.py:25-36).
+    Both are interpolated into SQL, so they are coerced to int first.
     """
+    n_hot = int(n_hot)
+    hot_turns = int(hot_turns)
     df = spark.range(n_convs).withColumnRenamed("id", "conv_seq")
     u_band = _u_sql("band", "conv_seq")
     u_size = _u_sql("size", "conv_seq")

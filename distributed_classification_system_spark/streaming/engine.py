@@ -349,10 +349,12 @@ def run_stream(
 
 
 def _read_results(spark: SparkSession, out_dir: str, row_type: str) -> DataFrame:
-    base = os.path.join(out_dir, "results")
+    # Read the results root and let partition pruning pick the row_type:
+    # a glob path makes Spark probe the literal pattern for a streaming
+    # metadata dir and log a FileNotFoundException trace on every read.
     return (
-        spark.read.option("basePath", base)
-        .parquet(os.path.join(base, "batch_id=*", f"row_type={row_type}"))
+        spark.read.parquet(os.path.join(out_dir, "results"))
+        .filter(F.col("row_type") == row_type)
         .withColumn("batch_id", F.col("batch_id").cast("long"))
     )
 

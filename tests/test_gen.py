@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from distributed_classification_system_spark import schemas
 from distributed_classification_system_spark.sources import gen
 from distributed_classification_system_spark.sources.gen import (
@@ -122,3 +124,10 @@ def test_golden_output_hashes(spark):
         _canon_md5(gen.gen_conversations(spark, 2000), ["conv_seq"])
         == "b7d6512831f891a4a580bac8d53072e8"
     )
+
+
+def test_sql_interpolated_params_coerced_to_int():
+    # n_hot and hot_turns are spliced into SQL text; a non-integer value
+    # fails before any Spark call (spark=None never gets touched)
+    with pytest.raises(ValueError):
+        gen.gen_conversations(None, 10, n_hot="1 OR 1=1")

@@ -73,3 +73,24 @@ def test_oracle_parity(spark, name):
 def test_rows_only_queries_run(spark, name):
     df = QUERIES[name](spark, SF_DIR)
     assert df.count() >= 0
+
+
+class _FakeSession:
+    """Stands in for a SparkSession: ``.read.parquet(path)`` returns a
+    fresh object per call."""
+
+    def __init__(self):
+        self.read = self
+
+    def parquet(self, path):
+        return object()
+
+
+def test_table_cache_evicts_other_sessions(monkeypatch):
+    monkeypatch.setattr(E, "_T_CACHE", {})
+    old, new = _FakeSession(), _FakeSession()
+    E._t(old, "sf", "documents")
+    E._t(old, "sf", "events")
+    df = E._t(new, "sf", "documents")
+    assert all(s is new for s, _ in E._T_CACHE.values())
+    assert E._t(new, "sf", "documents") is df
