@@ -57,8 +57,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: end-to-end transcript classification pipeline at
-    sf0.001 (deterministic generated transcripts → stream-static registry
-    join → vectorized kernel → per-conversation session summaries)."""
+    sf0.001 (deterministic generated transcripts → conv_config join →
+    label registry as plan constants → vectorized kernel →
+    per-conversation session summaries)."""
     from distributed_classification_system_spark.plans.flagship import flagship
 
     return flagship(spark, sf=0.001)

@@ -179,12 +179,12 @@ def main() -> None:
     # entirely on whichever headline query happens to run first
     from pyspark.sql import functions as F
 
-    from distributed_classification_system_spark.functions.kernel import classify_udf
+    from distributed_classification_system_spark.functions.kernel import make_registry_classify_udf
 
     spark.range(2000).select(
-        classify_udf(
+        make_registry_classify_udf({"warmup": ["dog", "cat"]})(
             F.concat(F.lit("dog cat x"), F.col("id").cast("string")),
-            F.array(F.lit("dog"), F.lit("cat")),
+            F.lit("warmup"),
             F.lit(3),
             F.lit(0.2),
         )

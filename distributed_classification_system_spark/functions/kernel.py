@@ -26,13 +26,15 @@ value is produced bit-identically by pandas/numpy, Spark SQL, and DuckDB —
 which makes the whole classification pipeline oracle-checkable, not just
 rows-only. Ties are broken by label ascending (deterministic ordering).
 
-Three interchangeable implementations, all same output:
-- ``score_text``     — scalar Python (the test oracle)
-- ``classify_udf``   — vectorized Arrow/pandas UDF (the mandated hot path;
-                       batched, no per-row Python at the Spark row level)
-- ``classify_expr``  — pure-Catalyst expression variant (whole-stage
-                       codegen; used to cross-check and to benchmark
-                       JVM-vs-Arrow execution)
+Two kernels and one oracle, all same output:
+- ``score_text``                 — scalar Python (the test oracle)
+- ``make_registry_classify_udf`` — vectorized Arrow/pandas UDF (the
+                                   mandated hot path; batched, no per-row
+                                   Python at the Spark row level), the
+                                   label registry compiled into the closure
+- ``classify_expr``              — pure-Catalyst expression variant
+                                   (whole-stage codegen; used to cross-check
+                                   and to benchmark JVM-vs-Arrow execution)
 """
 
 from __future__ import annotations
@@ -180,77 +182,39 @@ def _classify_batch(
     )
 
 
-def _label_groups(labels: pd.Series) -> "list[tuple[list[str], 'np.ndarray']]":
-    """Group batch rows by label set WITHOUT per-row tuple() hashing.
-
-    A cheap per-row fingerprint (len, first, last) buckets the rows; each
-    bucket is then verified homogeneous with one vectorized object-array
-    comparison against its first row (exact — heterogeneous buckets fall
-    back to per-row tuple grouping). Micro-batches carry very few distinct
-    label sets, so this is O(rows) + O(rows × L) C-level compares instead
-    of O(rows × L) Python hashing."""
-    import numpy as np
-
-    fps: dict[tuple, list[int]] = {}
-    vals = labels.to_numpy(dtype=object)
-    for i, labs in enumerate(vals):
-        m = len(labs)
-        fps.setdefault((m, labs[0] if m else None, labs[-1] if m else None), []).append(i)
-    groups: list[tuple[list[str], np.ndarray]] = []
-    for rows in fps.values():
-        rows_arr = np.asarray(rows, dtype=np.int64)
-        rep = vals[rows_arr[0]]
-        if len(rows_arr) > 1 and len(rep):
-            stacked = np.stack([vals[i] for i in rows_arr])
-            same = (stacked == np.asarray(rep, dtype=object)).all(axis=1)
-        else:
-            same = np.ones(len(rows_arr), dtype=bool)
-        if same.all():
-            groups.append((sorted(rep), rows_arr))
-        else:  # fingerprint collision between different sets: exact fallback
-            by_set: dict[tuple, list[int]] = {}
-            for i in rows_arr:
-                by_set.setdefault(tuple(vals[i]), []).append(int(i))
-            for key, rws in by_set.items():
-                groups.append((sorted(key), np.asarray(rws, dtype=np.int64)))
-    return groups
+_UDF_CACHE: dict[tuple, object] = {}
 
 
-@F.pandas_udf(returnType=CLASSIFY_RESULT)
-def classify_udf(
-    text: pd.Series, labels: pd.Series, top_k: pd.Series, threshold: pd.Series
-) -> pd.DataFrame:
-    """Vectorized kernel: one Arrow batch in, one batch of result structs out.
+def make_registry_classify_udf(labels_by_job: dict[str, list[str]]):
+    """The kernel UDF ``(text, job_type, top_k, threshold) -> CLASSIFY_RESULT``.
 
     Replaces the reference's per-message asyncio worker loop
     (ml-service/sqs_worker.py:157-174 + classification_controller.py:60-106)
     with true batch execution: tokens are exploded once per Arrow batch and
     counted into a (rows × labels) matrix with numpy scatter-adds; scoring,
-    ranking and thresholding are matrix ops. The per-label-set index is the
-    "model", built once per distinct label set per batch — mirroring
-    load-once model residency (classification_controller.py:23-35). The
-    only remaining per-row Python is materializing the top-k struct lists.
-    """
-    import numpy as np
+    ranking and thresholding are matrix ops. The only remaining per-row
+    Python is materializing the top-k struct lists.
 
-    thr = threshold.to_numpy(dtype=np.float64)
-    ks = np.maximum(top_k.to_numpy(dtype=np.int64), 1)
-    return _classify_batch(text, _label_groups(labels), thr, ks)
+    The label REGISTRY (a tiny static dim) is captured in the closure keyed
+    by job_type, so no per-row ``labels`` array — 5-20 strings per row,
+    1000 at the surveyed width, pure payload to the Python boundary —
+    crosses Arrow (guide §4.1). Each batch's rows are grouped by job_type
+    and each group's sorted label set is the "model", mirroring load-once
+    model residency (classification_controller.py:23-35). Callers take
+    model_name and the unregistered-job_type filter from the same
+    collected registry (operators.classify.classify_with_registry).
 
-
-def make_registry_classify_udf(labels_by_job: dict[str, list[str]]):
-    """Registry-dispatch kernel factory for the streaming path: the label
-    REGISTRY (a tiny static dim) is captured in the closure keyed by
-    job_type, so the per-row ``labels`` array column — 5-20 strings per
-    row, pure payload to the Python boundary — never crosses Arrow (guide
-    §4.1). The stream takes model_name and the unregistered-job_type
-    filter from the same collected registry as plan constants
-    (streaming.engine._registry_constants), so no registry column rides
-    the row. Output is identical to the 4-arg classify_udf fed by a
-    registry join."""
+    The UDF object is memoized per registry content: building a
+    pandas_udf (pickle + py4j registration) is driver-side work repeated
+    plans need not re-pay, and a UDF is an immutable expression template,
+    safe to reuse across DataFrames."""
     import numpy as np
 
     by_job = {j: sorted(ls) for j, ls in labels_by_job.items()}
+    key = tuple(sorted((j, tuple(ls)) for j, ls in by_job.items()))
+    cached = _UDF_CACHE.get(key)
+    if cached is not None:
+        return cached
 
     @F.pandas_udf(returnType=CLASSIFY_RESULT)
     def _udf(
@@ -265,47 +229,12 @@ def make_registry_classify_udf(labels_by_job: dict[str, list[str]]):
         ]
         return _classify_batch(text, groups, thr, ks)
 
-    return _udf
-
-
-_UDF_CACHE: dict[tuple, object] = {}
-
-
-def make_classify_udf(labels: list[str], top_k: int, threshold: float):
-    """Constant-config kernel factory: the label set, top_k and threshold
-    are closure constants, so the JVM never builds (and Arrow never ships)
-    a per-row label array — at the surveyed 1000-label width that column
-    alone was 1000 strings PER ROW crossing the Python boundary (guide
-    §4.1: pass only the columns the function needs). Output is identical
-    to ``classify_udf(text, lit(labels), lit(top_k), lit(threshold))``.
-
-    The UDF object is memoized per config: building a pandas_udf (pickle +
-    py4j registration) is driver-side work repeated invocations need not
-    re-pay, and Column/UDF objects are immutable expression templates that
-    are safe to reuse across DataFrames."""
-    import numpy as np
-
-    key = (tuple(labels), int(top_k), float(threshold))
-    cached = _UDF_CACHE.get(key)
-    if cached is not None:
-        return cached
-
-    ordered = sorted(labels)
-
-    @F.pandas_udf(returnType=CLASSIFY_RESULT)
-    def _udf(text: pd.Series) -> pd.DataFrame:
-        n = len(text)
-        thr = np.full(n, threshold, dtype=np.float64)
-        ks = np.full(n, max(1, top_k), dtype=np.int64)
-        groups = [(ordered, np.arange(n, dtype=np.int64))]
-        return _classify_batch(text, groups, thr, ks)
-
     _UDF_CACHE[key] = _udf
     return _udf
 
 
 def classify_expr(text: Column, labels: Column, top_k: Column, threshold: Column) -> Column:
-    """Pure-Catalyst variant of the kernel (same output as classify_udf).
+    """Pure-Catalyst variant of the kernel (same output as score_text).
 
     Stays entirely inside whole-stage codegen: tokens via ``split``, counts
     via ``filter``+``size``, ranking via ``array_sort`` with a comparator.

@@ -6,20 +6,24 @@ ml-service/sqs_worker.py:142-174, ml-service/controllers/
 classification_controller.py:60-106) as one declarative plan:
 
     transcripts ⋈ conv_config (equi, co-partitioned on conv_id)
-                ⋈ broadcast(label_registry) (stream-static dim join, K7/J3)
-                → [optional salted repartition — skew defense, T10]
-                → vectorized kernel (classify_udf / classify_expr)
+                → label registry as plan constants (classify_with_registry:
+                  job_type IN filter + model_name literal map, K7/J3)
+                → vectorized kernel (make_registry_classify_udf)
+
+``classify_with_registry`` is the one registry dispatch: the batch
+``classify_turns`` and the stream's ``classified_stream``
+(streaming/engine.py) both call it.
 
 Scale notes (100 TB):
 - conv_config is keyed by conv_id like the downstream session fold, so
   Catalyst reuses the same hash partitioning across join → groupBy — one
   shuffle, not two.
-- the registry is tiny (one row per job_type) → broadcast, no shuffle.
-- a hot conv_id (10^5 turns in one conversation) would serialize one task
-  in the *stateless* kernel stage if rows stayed partitioned by conv_id;
-  ``salt_buckets`` spreads each conversation over that many buckets before
-  the UDF runs. The keyed fold re-gathers by conv_id afterwards
-  (reference anti-pattern being fixed: global mutex serializing ALL jobs,
+- the registry is tiny (one row per job_type) → collected once per plan
+  and compiled into it: no join, no shuffle, no per-row label column.
+- a hot conv_id (10^5 turns in one conversation) lands in one partition
+  of the batch conv_config join; the streaming engine instead classifies
+  on scan partitions, before its only exchange (reference anti-pattern
+  being fixed there: global mutex serializing ALL jobs,
   backend-service/handlers/handlers.go:28,219-221).
 """
 
@@ -28,7 +32,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from distributed_classification_system_spark.functions.kernel import classify_expr, classify_udf
+from distributed_classification_system_spark.functions.kernel import (
+    classify_expr,
+    make_registry_classify_udf,
+)
 
 
 DOC_LABELS = ["spark", "query", "join", "filter", "window"]
@@ -44,6 +51,9 @@ assert len(DOC_LABELS_1K) == 1000
 # classify_expr Column templates per (labels, top_k, threshold) — see
 # classify_documents
 _EXPR_CACHE: dict[tuple, "F.Column"] = {}
+# the documents' one-entry registry key (the queries fix the config)
+_DOCS_JOB = "documents"
+TURN_COLS = ("conv_id", "turn_idx", "role", "text", "tool", "ts")
 
 
 def classify_documents(
@@ -72,12 +82,11 @@ def classify_documents(
             res = classify_expr(F.col("text"), lab_col, F.lit(top_k), F.lit(threshold))
             _EXPR_CACHE[key] = res
     else:
-        # constant-config factory: the label set never crosses the Python
-        # boundary per row (guide §4.1 — at 1000 labels the lit-array
-        # column was 1000 strings/row through Arrow for zero information)
-        from distributed_classification_system_spark.functions.kernel import make_classify_udf
-
-        res = make_classify_udf(labels, top_k, threshold)(F.col("text"))
+        # the one kernel factory with a one-entry registry: the label set
+        # rides the closure, never a per-row column (guide §4.1 — at 1000
+        # labels a lit-array column was 1000 strings/row through Arrow)
+        kern = make_registry_classify_udf({_DOCS_JOB: labels})
+        res = kern(F.col("text"), F.lit(_DOCS_JOB), F.lit(top_k), F.lit(threshold))
     return documents.select("doc_id", "lang", res.alias("r")).select(
         "doc_id",
         "lang",
@@ -89,52 +98,60 @@ def classify_documents(
     )
 
 
-def classify_turns(
-    transcripts: DataFrame,
-    conv_config: DataFrame,
-    registry: DataFrame,
-    use_expr: bool = False,
-    salt_buckets: int | None = None,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Classify every turn; returns the TURN_RESULTS columns minus lineage.
+def _registry_constants(registry: DataFrame) -> tuple[dict[str, str], dict[str, list[str]]]:
+    """Collect the label registry (a tiny static dim) to the driver as
+    ``job_type → model_name`` and ``job_type → labels``. A job_type must
+    name one model: a duplicate raises, where a join would have duplicated
+    every turn row of that job_type. Null job_types are skipped — they
+    never matched a join key either."""
+    model_by_job: dict[str, str] = {}
+    labels_by_job: dict[str, list[str]] = {}
+    for job_type, model_name, labels in registry.select("job_type", "model_name", "labels").collect():
+        if job_type is None:
+            continue
+        if job_type in model_by_job:
+            raise ValueError(f"label registry has more than one row for job_type {job_type!r}")
+        model_by_job[job_type] = model_name
+        labels_by_job[job_type] = list(labels)
+    return model_by_job, labels_by_job
 
-    ``use_expr=True`` switches to the pure-Catalyst kernel (same output),
-    ``salt_buckets`` enables the hot-conversation salting repartition.
-    """
-    df = transcripts.join(conv_config.select("conv_id", "job_type", "top_k", "confidence_threshold"), "conv_id")
-    df = df.join(F.broadcast(registry.select("job_type", "model_name", "labels")), "job_type")
 
-    if salt_buckets:
-        salt = F.pmod(F.xxhash64("turn_idx"), F.lit(salt_buckets))
-        parts = [num_partitions] if num_partitions else []
-        df = df.repartition(*parts, F.col("conv_id"), salt)
+def classify_with_registry(df: DataFrame, registry: DataFrame, *keep: str) -> DataFrame:
+    """K7 dispatch (classification_controller.py:77-80): classify ``df``'s
+    turns with the model and label set their job_type names.
 
-    if use_expr:
-        res = classify_expr(
-            F.col("text"), F.col("labels"), F.col("top_k"), F.col("confidence_threshold")
-        )
-    else:
-        res = classify_udf(
-            F.col("text"), F.col("labels"), F.col("top_k"), F.col("confidence_threshold")
-        )
+    The registry is collected once per call and enters the plan as
+    constants (see _registry_constants): an IN filter keeps an inner
+    join's semantics (unregistered job_types drop), a literal map supplies
+    ``model_used``, and the label arrays reach the kernel through its
+    closure, so no registry column rides the row and no micro-batch
+    launches a registry broadcast job.
 
-    return df.select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        "text",
-        "tool",
-        "ts",
-        F.col("model_name").alias("model_used"),
-        res.alias("r"),
-    ).select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        "text",
-        "tool",
-        "ts",
+    ``df`` carries text, job_type, top_k and confidence_threshold; the
+    result has the ``keep`` columns, ``model_used`` and the kernel's
+    CLASSIFY_RESULT struct ``r``."""
+    model_by_job, labels_by_job = _registry_constants(registry)
+    pairs = [F.lit(v) for kv in model_by_job.items() for v in kv]
+    model_used = (
+        F.create_map(*pairs)[F.col("job_type")] if pairs else F.lit(None).cast("string")
+    )
+    kern = make_registry_classify_udf(labels_by_job)
+    res = kern(F.col("text"), F.col("job_type"), F.col("top_k"), F.col("confidence_threshold"))
+    return df.filter(F.col("job_type").isin(list(model_by_job))).select(
+        *keep, model_used.alias("model_used"), res.alias("r")
+    )
+
+
+def classify_turns(transcripts: DataFrame, conv_config: DataFrame, registry: DataFrame) -> DataFrame:
+    """Classify every configured turn; returns the TURN_RESULTS columns
+    minus lineage. The batch twin of streaming.engine.classified_stream:
+    an inner conv_config join (unconfigured conversations drop; the stream
+    left-joins with defaults), then the same registry dispatch."""
+    df = transcripts.join(
+        conv_config.select("conv_id", "job_type", "top_k", "confidence_threshold"), "conv_id"
+    )
+    return classify_with_registry(df, registry, *TURN_COLS).select(
+        *TURN_COLS,
         "model_used",
         "r.top_prediction",
         "r.top_confidence",

@@ -2,8 +2,8 @@
 
 The batch analogue of the reference's main pipeline (`POST /submit` →
 classified per-job result, SURVEY.md §3.1): generate/load transcripts →
-stream-static registry join → vectorized classification → per-conversation
-session summaries.
+conv_config join → label registry as plan constants → vectorized
+classification → per-conversation session summaries.
 """
 
 from __future__ import annotations

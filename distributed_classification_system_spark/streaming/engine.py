@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from distributed_classification_system_spark.functions.validate import error_reason_expr
+from distributed_classification_system_spark.operators.classify import TURN_COLS, classify_with_registry
 from distributed_classification_system_spark.schemas import TRANSCRIPTS
 
 from distributed_classification_system_spark.streaming.state import (
@@ -86,42 +87,24 @@ def _config_join(df: DataFrame, conv_config: DataFrame, broadcast_config: bool) 
     return df.join(cfg.hint("shuffle_hash"), "conv_id", "left")
 
 
-def _registry_constants(registry: DataFrame) -> tuple[dict[str, str], dict[str, list[str]]]:
-    """Collect the label registry (a tiny static dim) to the driver as
-    ``job_type → model_name`` and ``job_type → labels``. A job_type must
-    name one model: a duplicate raises, where a join would have duplicated
-    every turn row of that job_type. Null job_types are skipped — they
-    never matched the join key either."""
-    model_by_job: dict[str, str] = {}
-    labels_by_job: dict[str, list[str]] = {}
-    for job_type, model_name, labels in registry.select("job_type", "model_name", "labels").collect():
-        if job_type is None:
-            continue
-        if job_type in model_by_job:
-            raise ValueError(f"label registry has more than one row for job_type {job_type!r}")
-        model_by_job[job_type] = model_name
-        labels_by_job[job_type] = list(labels)
-    return model_by_job, labels_by_job
-
-
 def classified_stream(
     stream: DataFrame,
     conv_config: DataFrame,
     registry: DataFrame,
-    watermark: str = WATERMARK_DELAY,
     broadcast_config: bool = True,
 ) -> DataFrame:
-    """watermark → conv_config join → registry constants → kernel
+    """watermark → conv_config join → registry dispatch → kernel
     (scan-partition parallel).
 
     The registry is collected once per call and compiled into the plan
-    (see _registry_constants), so it launches no per-batch job; the
-    conv_config join has two scales — see _config_join. With the default
-    broadcast the kernel runs on scan partitions with NO shuffle before
-    it; the only shuffle in the whole pipeline is the bucket exchange
-    feeding the keyed fold, so a hot conversation's kernel work spreads by
-    scan partition."""
-    df = _config_join(stream.withWatermark("ts", watermark), conv_config, broadcast_config)
+    (operators.classify.classify_with_registry, shared with the batch
+    classify_turns), so it launches no per-batch job; the conv_config
+    join has two scales — see _config_join. With the default broadcast
+    the kernel runs on scan partitions with NO shuffle before it; the
+    only shuffle in the whole pipeline is the bucket exchange feeding the
+    keyed fold, so a hot conversation's kernel work spreads by scan
+    partition."""
+    df = _config_join(stream.withWatermark("ts", WATERMARK_DELAY), conv_config, broadcast_config)
     # P10 defaults for unconfigured conversations — the reference's own
     # defaults (backend-service/handlers/handlers.go:63-69: top_k=5,
     # confidence_threshold=0.5); n_turns stays null → session closes by
@@ -131,46 +114,11 @@ def classified_stream(
         .withColumn("top_k", F.coalesce("top_k", F.lit(5)))
         .withColumn("confidence_threshold", F.coalesce("confidence_threshold", F.lit(0.5)))
     )
-    # K7 dispatch: the registry is collected once per call and enters the
-    # plan as constants — an IN filter keeps the inner join's semantics
-    # (unregistered job_types drop) and a literal map supplies model_name,
-    # so no micro-batch launches a registry broadcast job. The label
-    # ARRAYS go to the kernel via closure (make_registry_classify_udf), so
-    # 5-20 strings/row of pure payload never cross the Python boundary
-    # (guide §4.1)
-    model_by_job, labels_by_job = _registry_constants(registry)
-    df = df.filter(F.col("job_type").isin(list(model_by_job)))
-    pairs = [F.lit(v) for kv in model_by_job.items() for v in kv]
-    model_used = (
-        F.create_map(*pairs)[F.col("job_type")] if pairs else F.lit(None).cast("string")
-    )
     # T6 dead-letter tag: one codegen'd CASE per row; tagged rows still ride
     # the same query (kernel is null-safe) and exit as row_type='error'
     df = df.withColumn("error_reason", error_reason_expr())
-    from distributed_classification_system_spark.functions.kernel import (
-        make_registry_classify_udf,
-    )
-
-    kern = make_registry_classify_udf(labels_by_job)
-    res = kern(F.col("text"), F.col("job_type"), F.col("top_k"), F.col("confidence_threshold"))
-    return df.select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        "text",
-        "tool",
-        "ts",
-        model_used.alias("model_used"),
-        res.alias("r"),
-        "error_reason",
-        "n_turns",
-    ).select(
-        "conv_id",
-        "turn_idx",
-        "role",
-        "text",
-        "tool",
-        "ts",
+    return classify_with_registry(df, registry, *TURN_COLS, "error_reason", "n_turns").select(
+        *TURN_COLS,
         "model_used",
         F.col("r.top_prediction").alias("top_prediction"),
         F.col("r.top_confidence").alias("top_confidence"),
@@ -182,13 +130,13 @@ def classified_stream(
     )
 
 
-def folded_stream(df: DataFrame, fold_buckets: int = DEFAULT_FOLD_BUCKETS) -> DataFrame:
-    """The keyed session fold over ``fold_buckets`` state buckets (python
-    crossings per batch scale with buckets, not conversations); see
-    state.bucket_fold."""
-    bucketed = df.withColumn("bucket", F.pmod(F.xxhash64("conv_id"), F.lit(fold_buckets)))
+def folded_stream(df: DataFrame) -> DataFrame:
+    """The keyed session fold over DEFAULT_FOLD_BUCKETS state buckets
+    (python crossings per batch scale with buckets, not conversations);
+    see state.bucket_fold."""
+    bucketed = df.withColumn("bucket", F.pmod(F.xxhash64("conv_id"), F.lit(DEFAULT_FOLD_BUCKETS)))
     return bucketed.groupBy("bucket").applyInPandasWithState(
-        functools.partial(bucket_fold, n_buckets=fold_buckets),
+        functools.partial(bucket_fold, n_buckets=DEFAULT_FOLD_BUCKETS),
         outputStructType=FOLD_OUTPUT,
         stateStructType=BUCKET_STATE_SCHEMA,
         outputMode="append",
@@ -295,10 +243,7 @@ def run_stream(
     registry: DataFrame,
     checkpoint_dir: str | None = None,
     max_files_per_trigger: int | None = None,
-    fold_buckets: int = DEFAULT_FOLD_BUCKETS,
-    watermark: str = WATERMARK_DELAY,
     await_termination: bool = False,
-    collect_metrics: bool = True,
     broadcast_config: bool = True,
 ):
     """Run the engine over a transcript file stream: one availableNow
@@ -309,11 +254,13 @@ def run_stream(
     join (see _config_join) — identical output, differential-tested.
 
     ``max_files_per_trigger`` paces micro-batches the way the reference's
-    long-poll batch size (≤10 msgs) paces SQS consumption (S1)."""
+    long-poll batch size (≤10 msgs) paces SQS consumption (S1).
+
+    ``await_termination=True`` blocks until the stream drains and writes
+    the run's per-micro-batch metrics table to ``out_dir/metrics``."""
     checkpoint_dir = checkpoint_dir or os.path.join(out_dir, "_checkpoint")
 
-    listener = None
-    if collect_metrics and await_termination:
+    if await_termination:
         from distributed_classification_system_spark.streaming.metrics import MetricsListener
 
         listener = MetricsListener()
@@ -324,11 +271,9 @@ def run_stream(
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.parquet(input_dir)
 
-    classified = classified_stream(
-        stream, conv_config, registry, watermark, broadcast_config=broadcast_config,
-    )
+    classified = classified_stream(stream, conv_config, registry, broadcast_config=broadcast_config)
     q = (
-        folded_stream(classified, fold_buckets)
+        folded_stream(classified)
         .writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint_dir)
         .foreachBatch(_sink_batch(out_dir))
@@ -337,14 +282,13 @@ def run_stream(
     )
     if await_termination:
         q.awaitTermination()
-        if listener is not None:
-            spark.streams.removeListener(listener)
-            # the engine's observability table (FIXTURES.md §4c) — input to
-            # the W1-W8 analysis rollups, the analogue of the reference's
-            # CloudWatch series (metrics_collector.py:112-164). Written
-            # driver-side: a per-micro-batch table is a few rows per run,
-            # and a Spark write job costs ~0.4 s of launch+commit for it
-            listener.write_parquet(os.path.join(out_dir, "metrics"))
+        spark.streams.removeListener(listener)
+        # the engine's observability table (FIXTURES.md §4c) — input to
+        # the W1-W8 analysis rollups, the analogue of the reference's
+        # CloudWatch series (metrics_collector.py:112-164). Written
+        # driver-side: a per-micro-batch table is a few rows per run, and
+        # a Spark write job costs ~0.4 s of launch+commit for it
+        listener.write_parquet(os.path.join(out_dir, "metrics"))
     return q
 
 

@@ -43,12 +43,22 @@ session.
 from __future__ import annotations
 
 import json
+import warnings
 from collections.abc import Iterable
 from typing import Any
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import types as T
+
+# pyspark's own applyInPandasWithState serializer pads each output batch
+# with all-NA rows through pd.concat (pyspark/sql/pandas/serializers.py:1696
+# in pyspark 4.1.2), and pandas deprecates that with a FutureWarning. The
+# frames are not ours and the warning is not ours to fix; this module is
+# imported in every Python worker that runs the fold.
+warnings.filterwarnings(
+    "ignore", category=FutureWarning, module=r"pyspark\.sql\.pandas\.serializers"
+)
 
 # Rows entering the stateful fold (classified turns + conv config).
 FOLD_INPUT = T.StructType(

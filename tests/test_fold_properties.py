@@ -231,12 +231,12 @@ def test_bucket_fold_state_format_version():
 def test_kernel_udf_matches_scalar_oracle(tokens, top_k, threshold):
     """The vectorized kernel body equals the scalar reference on arbitrary
     token sequences (same scores bit-for-bit, same ordering/relabeling)."""
-    from distributed_classification_system_spark.functions.kernel import classify_udf
+    from distributed_classification_system_spark.functions.kernel import make_registry_classify_udf
 
     text = " ".join(tokens)
-    got = classify_udf.func(
+    got = make_registry_classify_udf({"job": LABELS}).func(
         pd.Series([text]),
-        pd.Series([LABELS]),
+        pd.Series(["job"]),
         pd.Series([top_k]),
         pd.Series([threshold]),
     ).iloc[0]

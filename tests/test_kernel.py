@@ -1,15 +1,18 @@
 """Kernel tests: scalar oracle ≡ pandas UDF ≡ Catalyst expression; edge
-cases for top-k, thresholds, ties (SURVEY.md §2.3)."""
+cases for top-k, thresholds, ties (SURVEY.md §2.3); the batch path's
+registry dispatch."""
 
 from __future__ import annotations
 
 import math
+import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from distributed_classification_system_spark.functions.kernel import (
     classify_expr,
-    classify_udf,
+    make_registry_classify_udf,
     score_text,
 )
 from distributed_classification_system_spark.operators.classify import classify_turns
@@ -69,10 +72,15 @@ def test_udf_and_expr_match_scalar_oracle(spark):
     t = gen_transcripts(spark, 40)
     cfg = gen_conv_config(spark, 40)
     reg = gen_label_registry(spark)
+    kern = make_registry_classify_udf(
+        {r.job_type: list(r.labels) for r in reg.select("job_type", "labels").collect()}
+    )
+    # the test joins the registry to hand each row's labels to the oracle
+    # and the Catalyst variant; the UDF takes only the job_type
     joined = (
         t.join(cfg, "conv_id")
         .join(F.broadcast(reg), "job_type")
-        .select("conv_id", "turn_idx", "text", "labels", "top_k", "confidence_threshold")
+        .select("conv_id", "turn_idx", "text", "job_type", "labels", "top_k", "confidence_threshold")
     )
     udf_res = joined.select(
         "conv_id",
@@ -81,7 +89,7 @@ def test_udf_and_expr_match_scalar_oracle(spark):
         "labels",
         "top_k",
         "confidence_threshold",
-        classify_udf("text", "labels", "top_k", "confidence_threshold").alias("r"),
+        kern("text", "job_type", "top_k", "confidence_threshold").alias("r"),
     ).collect()
     expr_res = {
         (r.conv_id, r.turn_idx): r.r
@@ -118,11 +126,8 @@ def test_kernel_at_1000_label_vocabulary(spark):
         for r in t.filter(F.col("turn_idx") < 4).select(
             "conv_id",
             "turn_idx",
-            classify_udf(
-                "text",
-                F.array(*[F.lit(l) for l in IMAGE_LABELS_1K]),
-                F.lit(3),
-                F.lit(0.0),
+            make_registry_classify_udf({"k1": IMAGE_LABELS_1K})(
+                "text", F.lit("k1"), F.lit(3), F.lit(0.0)
             ).alias("r"),
         ).collect()
     }
@@ -138,18 +143,28 @@ def test_kernel_at_1000_label_vocabulary(spark):
     assert hits > 0  # bias markers beat the synthetic padding somewhere
 
 
-def test_classify_turns_salting_invariance(spark):
-    """Salted and unsalted plans must return identical rows (T10)."""
-    t = gen_transcripts(spark, 30, n_hot=1, hot_turns=200)
-    cfg = gen_conv_config(spark, 30, n_hot=1, hot_turns=200)
+def test_classify_turns_registry_as_plan_constants(spark):
+    """The batch path dispatches on the registry the way the stream does:
+    a duplicate job_type raises (a join duplicated every turn of it), and
+    the registry never enters the executed plan — no broadcast of its
+    rows, no per-row label array into the Arrow kernel."""
+    from distributed_classification_system_spark.schemas import LABEL_REGISTRY, TRANSCRIPTS
+
+    # plain local relations: the plan then holds only what classify_turns adds
+    t = spark.createDataFrame(gen_transcripts(spark, 10).collect(), TRANSCRIPTS)
+    cfg = gen_conv_config(spark, 10)
+    cfg = spark.createDataFrame(cfg.collect(), cfg.schema)
     reg = gen_label_registry(spark)
-    base = classify_turns(t, cfg, reg).orderBy("conv_id", "turn_idx").collect()
-    salted = (
-        classify_turns(t, cfg, reg, salt_buckets=8)
-        .orderBy("conv_id", "turn_idx")
-        .collect()
+    dup = reg.union(
+        spark.createDataFrame([("custom_classification", "other-model", ["a"], None)], LABEL_REGISTRY)
     )
-    assert base == salted
+    with pytest.raises(ValueError, match="more than one row for job_type 'custom_classification'"):
+        classify_turns(t, cfg, dup)
+
+    plan = classify_turns(t, cfg, reg)._jdf.queryExecution().executedPlan().toString()
+    assert not re.search(r"\b(model_name|labels|prompt_template)#", plan), plan
+    kernel_lines = [line for line in plan.splitlines() if "ArrowEvalPython" in line]
+    assert kernel_lines and not any("labels" in line for line in kernel_lines), plan
 
 
 def test_per_turn_text_equality_under_stable_ordering(spark):

@@ -1,73 +1,47 @@
-"""Focused tests for the r6 kernel-internals optimization:
+"""Focused tests for the kernel internals:
 
-- `_label_groups` must group EXACTLY by label set even when the cheap
-  (len, first, last) fingerprint collides between different sets (the
-  vectorized-verify-then-fallback path).
-- `make_classify_udf` (constant-config factory, no per-row label array)
-  must be bit-identical to the generic 4-arg `classify_udf` on a real
-  Spark plan, including at the wide-vocabulary argpartition path.
+- the kernel factory's UDF (`make_registry_classify_udf`) must equal the
+  scalar oracle on a real Spark plan whose Arrow batches mix job_types
+  — rows of two label sets in one batch, null and empty text, and the
+  wide-vocabulary argpartition path at 1000 labels.
 - `conv_summaries`' single-pass grouping must emit an EMPTY map (not
   null) for a conversation whose every turn failed validation.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
+import itertools
+
 from pyspark.sql import functions as F
 
 from distributed_classification_system_spark.functions.kernel import (
-    _classify_batch,
-    _label_groups,
-    classify_udf,
-    make_classify_udf,
+    make_registry_classify_udf,
     score_text,
 )
 from distributed_classification_system_spark.operators.classify import DOC_LABELS_1K
 
 
-def test_label_groups_fingerprint_collision_falls_back_exactly():
-    # same length, same first, same last, different middle -> same
-    # fingerprint bucket, different sets: must split into exact groups
-    a = np.array(["alpha", "mid1", "omega"], dtype=object)
-    b = np.array(["alpha", "mid2", "omega"], dtype=object)
-    labels = pd.Series([a, b, a, b, a], dtype=object)
-    groups = _label_groups(labels)
-    got = {tuple(ordered): sorted(rows.tolist()) for ordered, rows in groups}
-    assert got == {
-        ("alpha", "mid1", "omega"): [0, 2, 4],
-        ("alpha", "mid2", "omega"): [1, 3],
-    }
-    # and scoring with those groups matches the scalar oracle per row
-    texts = pd.Series(["mid1 mid2 x", "mid1 mid2 x", "alpha", "", None])
-    out = _classify_batch(
-        texts, groups, np.full(5, 0.2), np.full(5, 2, dtype=np.int64)
-    )
-    sets = [a, b, a, b, a]
-    for i in range(5):
-        ref = score_text(texts[i], list(sets[i]), 2, 0.2)
-        assert out.iloc[i].top_prediction == ref["top_prediction"]
-        assert out.iloc[i].top_confidence == ref["top_confidence"]
-
-
-def test_factory_udf_matches_generic_udf_on_spark(spark):
+def test_factory_udf_matches_scalar_oracle_on_spark(spark):
+    labels_by_job = {"small": ["spark", "join", "filter"], "wide": DOC_LABELS_1K}
+    texts = ["spark join spark", "class0007 class0007 filter", "", None, "the a of"]
+    configs = [("small", 2, 0.3), ("wide", 3, 0.0)]
+    # every text under both job_types, interleaved, in ONE partition: the
+    # kernel must split each Arrow batch into its label-set groups
+    rows = [
+        (i, text, job, k, thr)
+        for i, (text, (job, k, thr)) in enumerate(itertools.product(texts, configs))
+    ]
     docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(
-            ["spark join spark", "class0007 class0007 filter", "", None, "the a of"]
-        )],
-        "doc_id long, text string",
-    )
-    for labels, k, thr in [(["spark", "join", "filter"], 2, 0.3), (DOC_LABELS_1K, 3, 0.0)]:
-        lab_col = F.array(*[F.lit(l) for l in labels])
-        generic = docs.select(
-            "doc_id", classify_udf("text", lab_col, F.lit(k), F.lit(thr)).alias("r")
-        )
-        factory = docs.select(
-            "doc_id", make_classify_udf(labels, k, thr)("text").alias("r")
-        )
-        g = {r["doc_id"]: r["r"] for r in generic.collect()}
-        f = {r["doc_id"]: r["r"] for r in factory.collect()}
-        assert g == f
+        rows, "doc_id long, text string, job_type string, top_k int, threshold double"
+    ).coalesce(1)
+    kern = make_registry_classify_udf(labels_by_job)
+    got = {
+        r["doc_id"]: r["r"].asDict(recursive=True)
+        for r in docs.select("doc_id", kern("text", "job_type", "top_k", "threshold").alias("r")).collect()
+    }
+    assert len(got) == len(rows) == 10
+    for doc_id, text, job, k, thr in rows:
+        assert got[doc_id] == score_text(text, labels_by_job[job], k, thr), (doc_id, job)
 
 
 def test_conv_summaries_all_failed_conversation_has_empty_map(spark):
