@@ -24,6 +24,8 @@ Subpackages
                   serve, rollup, dedup, ann, asof)
 - ``plans``     — end-to-end pipelines (flagship batch plan)
 - ``streaming`` — Structured Streaming engine (stateful fold, sink, metrics)
+- ``pydaemon``  — Spark's Python daemon for ``session.get_spark`` sessions
+                  (workers re-read a zip on their path only when it changed)
 """
 
 __version__ = "0.1.0"

@@ -202,7 +202,8 @@ def make_registry_classify_udf(labels_by_job: dict[str, list[str]]):
     and each group's sorted label set is the "model", mirroring load-once
     model residency (classification_controller.py:23-35). Callers take
     model_name and the unregistered-job_type filter from the same
-    collected registry (operators.classify.classify_with_registry).
+    collected registry (operators.classify.classify_with_registry); a
+    null or unregistered job_type reaching the kernel raises ValueError.
 
     The UDF object is memoized per registry content: building a
     pandas_udf (pickle + py4j registration) is driver-side work repeated
@@ -223,6 +224,13 @@ def make_registry_classify_udf(labels_by_job: dict[str, list[str]]):
         thr = threshold.to_numpy(dtype=np.float64)
         ks = np.maximum(top_k.to_numpy(dtype=np.int64), 1)
         codes, uniq = pd.factorize(job_type.to_numpy(dtype=object))
+        # a row outside every group would leave its output slots unfilled
+        bad = ([None] if (codes < 0).any() else []) + sorted(j for j in uniq if j not in by_job)
+        if bad:
+            raise ValueError(
+                f"no registered label set for job_type(s) {bad!r}; "
+                "filter them out first, as classify_with_registry does"
+            )
         groups = [
             (by_job[j], np.flatnonzero(codes == c).astype(np.int64))
             for c, j in enumerate(uniq)

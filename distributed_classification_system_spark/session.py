@@ -34,6 +34,14 @@ def get_spark(
     ``shuffle_partitions`` defaults to the core count — at cluster scale
     this would be ~2-3x total executor cores; the point is the same:
     never leave the 200 default in place.
+
+    Python workers fork from the engine's daemon (``pydaemon``), set in
+    ``spark.python.daemon.module``. pyspark's own daemon makes every task
+    re-read each zip on the worker path (pyspark.zip, the spark-core jar):
+    0.2-0.3 s per Python task on CPython 3.11, whatever the task's size.
+    The engine's daemon re-reads a zip only when the file has changed. Its
+    workers must import this package, as the engine's UDFs and fold
+    already require; ``extra_conf`` can set the conf back.
     """
     cpus = cpus or DEFAULT_CPUS
     builder = (
@@ -53,6 +61,7 @@ def get_spark(
         # few GB and the kernel runs on scan partitions — keep every core
         # fed. On a real 100 TB cluster the default is fine.
         .config("spark.sql.files.maxPartitionBytes", "32m")
+        .config("spark.python.daemon.module", "distributed_classification_system_spark.pydaemon")
     )
     # Single-box fidelity: on a real cluster every executor has its own
     # local disk, so shuffle/spill I/O scales with the node count. On one

@@ -178,3 +178,20 @@ def test_per_turn_text_equality_under_stable_ordering(spark):
     assert [(r.conv_id, r.turn_idx, r.text) for r in out] == [
         (r.conv_id, r.turn_idx, r.text) for r in src
     ]
+
+
+def test_registry_udf_rejects_unregistered_job_types():
+    """A row the registry cannot classify raises, naming its job_type,
+    instead of leaving its output slots unfilled (a null job_type used to
+    read top_confidence from an uninitialised slot)."""
+    import pandas as pd
+
+    kern = make_registry_classify_udf({"a": LABELS}).func
+    text = pd.Series(["dog cat", "dog"])
+    k, thr = pd.Series([2, 2]), pd.Series([0.0, 0.0])
+    ok = kern(text, pd.Series(["a", "a"]), k, thr)
+    assert list(ok["top_prediction"]) == ["cat", "dog"]
+    with pytest.raises(ValueError, match=r"job_type\(s\) \[None\]"):
+        kern(text, pd.Series(["a", None]), k, thr)
+    with pytest.raises(ValueError, match=r"job_type\(s\) \['zz'\]"):
+        kern(text, pd.Series(["zz", "a"]), k, thr)
