@@ -147,9 +147,9 @@ def _text_sql() -> str:
 
 # One live cached transcript relation (same discipline as operators/
 # dedup.py:_swap_cache): fixture writers evaluate the generated table
-# TWICE — repartitionByRange samples the child to compute range bounds,
-# then the write evaluates it again — so the generator caches its output
-# and each new invocation releases the previous cache.
+# TWICE — a first job takes the slice bounds (ts quantiles or a range
+# sample), then the write evaluates it again — so the generator caches
+# its output and each new invocation releases the previous cache.
 _live_gen_cache: list[DataFrame] = []
 
 

@@ -327,11 +327,6 @@ def read_failed_turns(spark: SparkSession, out_dir: str) -> DataFrame:
         df = _read_results(spark, out_dir, "error")
     except AnalysisException:
         return spark.createDataFrame([], cols)
-    if "retry_count" not in df.columns:
-        # sink files written before the r3 format change (per-attempt
-        # retry counters) carry no retry_count column — surface them as
-        # attempt-unknown (null) instead of failing the read
-        df = df.withColumn("retry_count", F.lit(None).cast("int"))
     return df.select(
         "conv_id", "turn_idx", "role", "ts", "error_reason", "retry_count",
         "batch_id", "part_id",
@@ -374,21 +369,23 @@ def write_stream_fixture(transcripts: DataFrame, input_dir: str, n_files: int = 
     import tempfile
     import time
 
-    from pyspark.sql import Window
-
     os.makedirs(input_dir, exist_ok=True)
-    staged = transcripts.withColumn("_slice", F.ntile(n_files).over(Window.orderBy("ts")))
+    # exact ts quantiles cut the slices: no one-core sort, same files per input
+    us = F.unix_micros("ts")
+    probs = [i / n_files for i in range(1, n_files)]
+    cuts = transcripts.select(us.alias("us")).approxQuantile("us", probs, 0.0) if probs else []
+    staged = (
+        transcripts.withColumn("_slice", sum(((us > c).cast("int") for c in cuts), F.lit(1)))
+        .repartition(n_files, "_slice")  # one task, so one file, per slice
+        .sortWithinPartitions("_slice", "ts")
+    )
     tmp = tempfile.mkdtemp()
     staged.write.partitionBy("_slice").parquet(os.path.join(tmp, "slices"))
     for i in range(1, n_files + 1):
-        parts = sorted(glob.glob(os.path.join(tmp, "slices", f"_slice={i}", "*.parquet")))
+        parts = glob.glob(os.path.join(tmp, "slices", f"_slice={i}", "*.parquet"))
+        assert len(parts) == 1, f"time slice {i} of {n_files} came out as {len(parts)} files"
         dest = os.path.join(input_dir, f"f{i:04d}.parquet")
-        if len(parts) == 1:
-            shutil.move(parts[0], dest)
-        else:  # merge multi-part slice into one file via pandas
-            import pandas as pd
-
-            pd.concat([pd.read_parquet(p) for p in parts]).to_parquet(dest, index=False)
+        shutil.move(parts[0], dest)
         t = time.time() - (n_files - i) * 2
         os.utime(dest, (t, t))
     shutil.rmtree(tmp)

@@ -11,12 +11,15 @@ when its fold only expires timers). The bucket count is pinned in the
 saved state: conv_id → bucket routing depends on it. Per conversation:
 
 - dedup by turn_idx against state (A2; ref scans DetailedResults O(n) per
-  message, handlers.go:247-256 — we keep a seen-set, vectorized isin)
-- counters: total/classified/unknown, processing-time sum (A4/A6)
+  message, handlers.go:247-256 — we check only the conversations a batch
+  touches, against the turn indexes their state already records: the
+  label lists and the failed-turn retry keys)
+- counters: classified/unknown/failed, processing-time sum (A4/A6); total
+  is their sum, as every folded turn lands in exactly one of them
 - label → turn-name grouping (A3, handlers.go:263-264) with stable
   turn_idx ordering (W10 — ref appends in arrival order; we sort the
   grouping lists at emission)
-- completion when n_seen >= n_expected (A5, handlers.go:291-299), **or**
+- completion when total >= n_expected (A5, handlers.go:291-299), **or**
   session-window timeout once the event-time watermark passes
   last_activity + gap — the late-data-safe improvement over the
   reference, which leaves a job 'processing' forever if one message is
@@ -106,6 +109,11 @@ _OUT_COLS = [f.name for f in FOLD_OUTPUT.fields]
 _EMPTY = {c: None for c in _OUT_COLS}
 
 
+def _total(st: dict[str, Any]) -> int:
+    # every folded turn lands in exactly one of the three counters
+    return st["classified"] + st["unknown"] + st["failed"]
+
+
 def _summary_row(conv_id: str, status: str, st: dict[str, Any]) -> dict[str, Any]:
     # state stores turn indexes only; the stable name is derived here —
     # half the state-blob JSON and no per-turn formatting in the hot fold
@@ -115,7 +123,7 @@ def _summary_row(conv_id: str, status: str, st: dict[str, Any]) -> dict[str, Any
     payload = {
         "status": status,
         "model_used": st["model_used"],
-        "total": len(st["seen"]),
+        "total": _total(st),
         "classified": st["classified"],
         "unknown": st["unknown"],
         "failed": st["failed"],
@@ -140,27 +148,21 @@ def _summary_frame(rows: list[dict[str, Any]]) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=_OUT_COLS)
 
 
-def _null_unless(err_mask: "np.ndarray") -> "pd.arrays.IntegerArray":
-    """Nullable Int32 column: 0 where err_mask, <NA> elsewhere — allocation
-    is two flat numpy arrays, no per-row Python objects."""
-    return pd.arrays.IntegerArray(
-        np.zeros(len(err_mask), dtype="int32"), mask=~err_mask
-    )
-
-
 # One state row per bucket: a JSON blob {"version": STATE_FORMAT_VERSION,
 # "buckets": n_buckets, "convs": {conv_id: session state}}.
 BUCKET_STATE_SCHEMA = T.StructType([T.StructField("states_json", T.StringType())])
 
 # Bump on any change to the blob or per-conversation state layout. Version
 # 1 was the unversioned bare {conv_id: state} dict; version 2 carried no
-# bucket count.
-STATE_FORMAT_VERSION = 3
+# bucket count; version 3 recorded every folded turn a second time in a
+# per-conversation `seen` list.
+STATE_FORMAT_VERSION = 4
 
 
 def _new_conv_state() -> dict[str, Any]:
     # bucket-fold per-conversation state; labels kept as a plain dict —
-    # the whole bucket blob is JSON-serialized once, so no inner round-trip
+    # the whole bucket blob is JSON-serialized once, so no inner round-trip.
+    # A folded turn is recorded once: in labels if valid, in retries if not.
     return {
         "n_expected": -1,
         "classified": 0,
@@ -169,8 +171,7 @@ def _new_conv_state() -> dict[str, Any]:
         "sum_cents": 0,
         "max_ts_us": 0,
         "model_used": None,
-        "seen": [],
-        "labels": {},
+        "labels": {},  # label -> turn_idx list, valid turns only
         "done": False,
         "retries": {},  # turn_idx (str) -> redelivery count, failed turns only
     }
@@ -184,81 +185,88 @@ def _expire_due(states: dict[str, dict], wm_ms: int) -> list[dict[str, Any]]:
         st = states[conv_id]
         if st["max_ts_us"] // 1000 + SESSION_GAP_MS <= wm_ms:
             del states[conv_id]
-            if not st["done"] and st["seen"]:
-                st["seen"] = list(st["seen"])
+            if not st["done"]:
                 out.append(_summary_row(conv_id, "timeout", st))
     return out
+
+
+def _group_starts(conv_arr: np.ndarray) -> np.ndarray:
+    """Offsets where each run of equal conv_ids starts in a sorted array."""
+    return np.flatnonzero(np.r_[True, conv_arr[1:] != conv_arr[:-1]])
 
 
 def _fold_one_pdf(
     pdf: pd.DataFrame,
     states: dict[str, dict],
-    seen_keys: set[str],
-    done_convs: set[str],
     summaries: list[dict[str, Any]],
 ) -> pd.DataFrame | None:
     """Fold ONE micro-batch slice into the bucket's per-conversation
-    states. Mutates states/seen_keys/done_convs/summaries; returns the
-    per-turn pass-through frame (row_type turn|error) or None."""
+    states. Only the conversations in the slice are checked, each against
+    its own state: a tombstoned (done) one drops all its rows, an open one
+    drops the turns its label lists or retry keys already hold. Mutates
+    states/summaries; returns the per-turn pass-through frame (row_type
+    turn|error) or None."""
     # the grouping column is not part of FOLD_OUTPUT
-    pdf = pdf.drop(columns=["bucket"], errors="ignore").drop_duplicates(["conv_id", "turn_idx"])
-    retry_out = None
-    if seen_keys:
-        keys = pdf["conv_id"] + "|" + pdf["turn_idx"].astype(str)
-        dup = keys.isin(seen_keys).to_numpy()
-        if dup.any():
-            # cross-batch redelivery of a FAILED turn: bump its attempt
-            # counter (ref models.go:20 RetryCount) and log the attempt as
-            # another error row; counters/completion already counted it.
-            # Redeliveries to tombstoned (done) conversations drop silently,
-            # exactly like redelivered valid turns.
-            re_err = pdf[dup & pdf["error_reason"].notna().to_numpy()]
-            if not re_err.empty:
-                bumps: list[int | None] = []
-                for cid, i in zip(re_err["conv_id"], re_err["turn_idx"]):
-                    st = states.get(cid)
-                    if st is None or st["done"]:
-                        bumps.append(None)
-                    else:
-                        r = st.setdefault("retries", {})
-                        k = str(int(i))
-                        r[k] = r.get(k, 0) + 1
-                        bumps.append(r[k])
-                re_err = re_err.assign(row_type="error", summary_json=None, retry_count=bumps)
-                re_err = re_err[re_err["retry_count"].notna()]
-                # match the hot path's nullable Int32 so the later concat
-                # keeps a flat dtype instead of degrading to object
-                re_err = re_err.assign(retry_count=re_err["retry_count"].astype("Int32"))
-                if not re_err.empty:
-                    retry_out = re_err
-            pdf = pdf[~dup]
-    if done_convs:
-        pdf = pdf[~pdf["conv_id"].isin(done_convs)]
+    pdf = (
+        pdf.drop(columns=["bucket"], errors="ignore")
+        .drop_duplicates(["conv_id", "turn_idx"])
+        .sort_values(["conv_id", "turn_idx"])
+    )
     if pdf.empty:
-        return retry_out
+        return None
+    conv_arr = pdf["conv_id"].to_numpy()
+    idx_arr = pdf["turn_idx"].to_numpy()
+    err_arr = pdf["error_reason"].notna().to_numpy()
+
+    # cross-batch dedup: new marks first deliveries; retry holds an error
+    # row's attempt counter (0 on its first delivery)
+    new = np.ones(len(pdf), dtype=bool)
+    retry = np.zeros(len(pdf), dtype="int32")
+    starts = _group_starts(conv_arr)
+    for s, e in zip(starts, np.append(starts[1:], len(pdf))):
+        st = states.get(conv_arr[s])
+        if st is None:
+            continue
+        if st["done"]:
+            # redelivery after completion drops silently, failed turns too
+            new[s:e] = False
+            continue
+        folded = {i for idxs in st["labels"].values() for i in idxs}
+        folded.update(map(int, st["retries"]))
+        for j in range(s, e):
+            i = int(idx_arr[j])
+            if i not in folded:
+                continue
+            new[j] = False
+            if err_arr[j]:
+                # redelivery of a FAILED turn: bump its attempt counter (ref
+                # models.go:20 RetryCount) and log the attempt as another
+                # error row; counters/completion already counted it
+                k = str(i)
+                retry[j] = st["retries"][k] = st["retries"].get(k, 0) + 1
 
     # per-turn pass-through: ONE vectorized assign for the whole bucket;
     # T6 rows surface as row_type='error' in the same sink pass (retry
-    # counter: 0 on a first-attempt error, null on turns — as a nullable
-    # Int32 array, never an object column: np.where(mask, 0, None) would
-    # box one PyObject per output row on the hot path)
-    err_mask = pdf["error_reason"].notna().to_numpy()
-    out = pdf.assign(
-        row_type=np.where(err_mask, "error", "turn"),
+    # counter null on turns — as a nullable Int32 array, never an object
+    # column: np.where(mask, retry, None) would box one PyObject per
+    # output row on the hot path)
+    emit = new | (retry > 0)
+    if not emit.any():
+        return None
+    out = pdf[emit].assign(
+        row_type=np.where(err_arr[emit], "error", "turn"),
         summary_json=None,
-        retry_count=_null_unless(err_mask),
+        retry_count=pd.arrays.IntegerArray(retry[emit], mask=~err_arr[emit]),
     )
-    if retry_out is not None:
-        out = pd.concat([out, retry_out])
-    seen_keys.update(pdf["conv_id"] + "|" + pdf["turn_idx"].astype(str))
+    if not new.any():
+        return out
+    if not new.all():
+        pdf = pdf[new]
+        conv_arr, idx_arr, err_arr = conv_arr[new], idx_arr[new], err_arr[new]
 
     # per-conversation increments via numpy group-boundary reductions —
     # no per-group pandas objects, no iterrows, no agg(list)
-    pdf = pdf.sort_values(["conv_id", "turn_idx"])
-    conv_arr = pdf["conv_id"].to_numpy()
-    idx_arr = pdf["turn_idx"].to_numpy()
     pred_arr = pdf["top_prediction"].to_numpy()
-    err_arr = pdf["error_reason"].notna().to_numpy()
     unk_arr = ((pred_arr == "unknown") & ~err_arr).astype("int64")
     fail_arr = err_arr.astype("int64")
     # ROUNDING PRECONDITION (holds for all cents conversions: np.rint
@@ -273,15 +281,15 @@ def _fold_one_pdf(
     nexp_arr = pdf["n_turns"].to_numpy()
     model_arr = pdf["model_used"].to_numpy()
 
-    uconv, starts = np.unique(conv_arr, return_index=True)  # sorted input
+    starts = _group_starts(conv_arr)
     ends = np.append(starts[1:], len(conv_arr))
     unk_sums = np.add.reduceat(unk_arr, starts)
     fail_sums = np.add.reduceat(fail_arr, starts)
     ms_sums = np.add.reduceat(ms_arr, starts)
     ts_maxs = np.maximum.reduceat(ts_arr, starts)
 
-    for gi, conv_id in enumerate(uconv):
-        s, e = int(starts[gi]), int(ends[gi])
+    for gi, (s, e) in enumerate(zip(starts.tolist(), ends.tolist())):
+        conv_id = conv_arr[s]
         st = states.get(conv_id)
         if st is None:
             st = states[conv_id] = _new_conv_state()
@@ -294,23 +302,17 @@ def _fold_one_pdf(
         st["failed"] += int(fail_sums[gi])
         st["sum_cents"] += int(ms_sums[gi])
         st["max_ts_us"] = max(st["max_ts_us"], int(ts_maxs[gi]))
-        st["seen"] = sorted(set(st["seen"]).union(int(i) for i in idx_arr[s:e]))
         labels = st["labels"]
         ok = ~err_arr[s:e]
         preds_slice = pred_arr[s:e][ok]
         idxs_slice = idx_arr[s:e][ok]
         for p in dict.fromkeys(preds_slice):  # distinct, order-stable
             labels.setdefault(p, []).extend(int(i) for i in idxs_slice[preds_slice == p])
-        bad_idxs = idx_arr[s:e][~ok]
-        if bad_idxs.size:
-            r = st.setdefault("retries", {})
-            for i in bad_idxs:  # first attempt registers at 0 retries
-                r.setdefault(str(int(i)), 0)
-        if st["n_expected"] > 0 and len(st["seen"]) >= st["n_expected"]:
+        for i in idx_arr[s:e][~ok]:  # first attempt registers at 0 retries
+            st["retries"].setdefault(str(int(i)), 0)
+        if st["n_expected"] > 0 and _total(st) >= st["n_expected"]:
             st["done"] = True  # slim tombstone until watermark expiry
-            done_convs.add(conv_id)
             summaries.append(_summary_row(conv_id, "completed", st))
-            st["seen"] = []
             st["labels"] = {}
             st["retries"] = {}
     return out
@@ -362,11 +364,8 @@ def bucket_fold(
 
     summaries: list[dict[str, Any]] = []
     if not state.hasTimedOut:
-        # cross-batch dedup set: "conv|idx" keys of everything already folded
-        seen_keys = {f"{cid}|{i}" for cid, st in states.items() for i in st["seen"]}
-        done_convs = {cid for cid, st in states.items() if st["done"]}
         for pdf in pdfs:
-            out = _fold_one_pdf(pdf, states, seen_keys, done_convs, summaries)
+            out = _fold_one_pdf(pdf, states, summaries)
             if out is not None:
                 yield out
 

@@ -27,6 +27,7 @@ from distributed_classification_system_spark.streaming.state import (
     _new_conv_state,
     bucket_fold,
 )
+from scripts.fold_microbench import FakeGroupState
 
 LABELS = ["dog", "cat", "bird"]
 
@@ -48,14 +49,12 @@ def _turns_frame(rows: list[dict]) -> pd.DataFrame:
 
 def _run_fold(batches: list[list[dict]]):
     states: dict = {}
-    seen: set = set()
-    done: set = set()
     summaries: list[dict] = []
     emitted = []  # (conv_id, turn_idx, row_type, retry_count)
     for b in batches:
         if not b:
             continue
-        out = _fold_one_pdf(_turns_frame(b), states, seen, done, summaries)
+        out = _fold_one_pdf(_turns_frame(b), states, summaries)
         if out is not None:
             emitted.extend(
                 zip(
@@ -126,6 +125,13 @@ def test_fold_invariant_under_slicing_duplication_reordering(delivery):
     key = lambda s: (s["conv_id"], s["summary_json"])  # noqa: E731
     assert sorted(map(key, d_summaries)) == sorted(map(key, g_summaries))
     assert len({s["conv_id"] for s in d_summaries}) == len(d_summaries)
+    # the summary total is derived from the fold's counters: pin it against
+    # the distinct turns delivered, not against those counters
+    delivered = {}
+    for r in rows:
+        delivered.setdefault(r["conv_id"], set()).add(r["turn_idx"])
+    for s in d_summaries:
+        assert json.loads(s["summary_json"])["total"] == len(delivered[s["conv_id"]])
     # turn pass-through: exactly-once per (conv, turn) regardless of dup
     d_turns = [(c, i) for c, i, rt, _ in d_emitted if rt == "turn"]
     g_turns = [(c, i) for c, i, rt, _ in g_emitted if rt == "turn"]
@@ -158,35 +164,7 @@ def test_expiry_emits_timeout_only_for_open_sessions(delivery):
     assert {r["conv_id"] for r in expired}.isdisjoint(completed)
 
 
-class _FakeGroupState:
-    """The slice of pyspark's GroupState that bucket_fold uses."""
-
-    def __init__(self, blob: str | None = None):
-        self.blob = blob
-        self.hasTimedOut = False
-
-    @property
-    def exists(self) -> bool:
-        return self.blob is not None
-
-    @property
-    def get(self) -> tuple:
-        return (self.blob,)
-
-    def update(self, row: tuple) -> None:
-        (self.blob,) = row
-
-    def remove(self) -> None:
-        self.blob = None
-
-    def getCurrentWatermarkMs(self) -> int:
-        return 0
-
-    def setTimeoutTimestamp(self, ts: int) -> None:
-        pass
-
-
-def _fold_bucket(rows: list[dict], state: _FakeGroupState, n_buckets: int = 16):
+def _fold_bucket(rows: list[dict], state: FakeGroupState, n_buckets: int = 16):
     return list(bucket_fold((0,), iter([_turns_frame(rows)]), state, n_buckets))
 
 
@@ -202,21 +180,26 @@ def test_bucket_fold_state_format_version():
     convs = {"conv-0": _new_conv_state()}
     unversioned = json.dumps(convs)  # the version-1 blob
     v2 = json.dumps({"version": 2, "convs": convs})  # no bucket count
+    # version 3 recorded every folded turn again in a per-conversation list
+    v3 = json.dumps(
+        {"version": 3, "buckets": 16, "convs": {"conv-0": {**_new_conv_state(), "seen": [0]}}}
+    )
     future = json.dumps({"version": STATE_FORMAT_VERSION + 1, "buckets": 16, "convs": {}})
-    for blob in (unversioned, v2, future):
+    for blob in (unversioned, v2, v3, future):
         with pytest.raises(RuntimeError, match="format version .* Delete the checkpoint dir and replay the input"):
-            _fold_bucket(rows, _FakeGroupState(blob))
+            _fold_bucket(rows, FakeGroupState(blob))
 
-    state = _FakeGroupState()
+    state = FakeGroupState()
     assert len(_fold_bucket(rows[:2], state)) == 1
     saved = json.loads(state.blob)
     assert (saved["version"], saved["buckets"]) == (STATE_FORMAT_VERSION, 16)
+    assert "seen" not in saved["convs"]["conv-0"]
     # the same blob resumed under another bucket count would re-route
     # conversations: it must raise, not fold
     with pytest.raises(RuntimeError, match="16 fold buckets, this run uses 32.* Delete the checkpoint dir"):
-        _fold_bucket(rows[1:], _FakeGroupState(state.blob), n_buckets=32)
+        _fold_bucket(rows[1:], FakeGroupState(state.blob), n_buckets=32)
     # resume from the saved blob; turn 1 is a redelivery
-    *turns, summaries = _fold_bucket(rows[1:], _FakeGroupState(state.blob))
+    *turns, summaries = _fold_bucket(rows[1:], FakeGroupState(state.blob))
     summary = json.loads(summaries["summary_json"].iloc[0])
     assert (summary["status"], summary["total"], summary["classified"]) == ("completed", 4, 4)
     assert list(turns[0]["turn_idx"]) == [2, 3]
