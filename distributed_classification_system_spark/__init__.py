@@ -10,10 +10,13 @@ load-test analytics — as an idiomatic Spark engine:
 
 - input: table/stream of multi-turn agent transcripts
   ``(conv_id, turn_idx, role, text, tool, ts)``
-- classification kernel: vectorized Arrow/pandas UDF (no per-row Python)
+- classification kernel: vectorized Arrow UDF (``pa.Array`` in and out,
+  no per-row Python)
 - session fold: ``applyInPandasWithState`` keyed by a hash bucket of
   ``conv_id`` (one state row per bucket)
-- sink: idempotent MERGE keyed ``(conv_id, turn_idx)`` (exactly-once)
+- sink: one write per micro-batch into its ``batch_id`` directory,
+  overwritten on replay (idempotent); the fold dedups ``(conv_id, turn_idx)``
+  so each turn lands once (exactly-once)
 - analytics: Catalyst-native window/aggregate queries
 
 Subpackages

@@ -28,14 +28,14 @@ NULL_TS = "null_ts"
 BAD_TURN_IDX = "bad_turn_idx"
 
 
-def error_reason_expr(
-    text: str = "text", ts: str = "ts", turn_idx: str = "turn_idx"
-) -> Column:
-    """First failing validation, NULL when the row is valid."""
+def error_reason_expr() -> Column:
+    """First failing validation of ``text`` / ``ts`` / ``turn_idx``, NULL
+    when the row is valid."""
+    text, turn_idx = F.col("text"), F.col("turn_idx")
     return (
-        F.when(F.col(text).isNull() | (F.length(F.col(text)) == 0), F.lit(EMPTY_TEXT))
-        .when(F.col(ts).isNull(), F.lit(NULL_TS))
-        .when(F.col(turn_idx).isNull() | (F.col(turn_idx) < 0), F.lit(BAD_TURN_IDX))
+        F.when(text.isNull() | (F.length(text) == 0), F.lit(EMPTY_TEXT))
+        .when(F.col("ts").isNull(), F.lit(NULL_TS))
+        .when(turn_idx.isNull() | (turn_idx < 0), F.lit(BAD_TURN_IDX))
     )
 
 

@@ -254,14 +254,6 @@ def chunk_shared_pairs(
     )
 
 
-_SIMHASH_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("simhash", T.LongType()),
-    ]
-)
-
-
 @F.pandas_udf(T.LongType())
 def simhash64(text: pd.Series) -> pd.Series:
     """64-bit SimHash fingerprint: per-token md5-prefix hash, bitwise

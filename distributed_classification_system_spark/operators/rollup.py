@@ -16,9 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-def _hour():
-    return F.date_trunc("hour", F.col("ts"))
-
 
 def desc_stats(events: DataFrame) -> DataFrame:
     """A8 descriptive statistics per series (analyze_results.py:41-56)."""
@@ -103,68 +100,18 @@ def sliding_window(events: DataFrame) -> DataFrame:
     )
 
 
-def _hourly_counts(events: DataFrame) -> DataFrame:
-    return events.groupBy(_hour().alias("hour")).agg(F.count("*").alias("cnt"))
-
-
-def drain_rate(events: DataFrame) -> DataFrame:
-    """W1 discrete derivative over the hourly series
-    (generate_graphs.py:552-560)."""
-    w = Window.orderBy("hour")
-    return _hourly_counts(events).select(
-        "hour",
-        "cnt",
-        (F.col("cnt") - F.lag("cnt").over(w)).alias("delta"),
-    )
-
-
-def moving_avg(events: DataFrame, width: int = 2) -> DataFrame:
-    """W4 centered moving average (generate_graphs.py:604-609) — exact:
-    integer window sum / window count."""
-    w = Window.orderBy("hour").rowsBetween(-width, width)
-    return _hourly_counts(events).select(
-        "hour",
-        "cnt",
-        (F.sum("cnt").over(w).cast("double") / F.count("*").over(w)).alias("cnt_ma"),
-    )
-
-
-def cumulative_sum(events: DataFrame) -> DataFrame:
-    """W5 cumulative request count (generate_graphs.py:625-631)."""
-    w = Window.orderBy("hour").rowsBetween(Window.unboundedPreceding, 0)
-    return _hourly_counts(events).select("hour", "cnt", F.sum("cnt").over(w).alias("cum_cnt"))
-
-
-def scaling_events(events: DataFrame) -> DataFrame:
-    """W3 scaling-event detection: compare each point to previous, emit
-    (ts, direction, delta) (generate_graphs.py:194-213) — CEP-style lag
-    pattern."""
-    w = Window.orderBy("hour")
-    hourly = _hourly_counts(events).select(
-        "hour", "cnt", F.lag("cnt").over(w).alias("prev_cnt")
-    )
-    return hourly.filter(F.col("prev_cnt").isNotNull() & (F.col("cnt") != F.col("prev_cnt"))).select(
-        "hour",
-        F.when(F.col("cnt") > F.col("prev_cnt"), F.lit("scale_up"))
-        .otherwise(F.lit("scale_down"))
-        .alias("direction"),
-        (F.col("cnt") - F.col("prev_cnt")).alias("delta"),
-    )
-
-
 def hourly_series(events: DataFrame) -> DataFrame:
     """W1/W2/W3/W4/W5 consolidated: the hourly count series with its lag
     derivative (drain rate), centered moving average, cumulative sum and
-    scaling-event direction in ONE window scan. The four single-metric
-    variants above share this CTE and plan shape — one query covers them
-    all (and on a cluster one pass beats four). The global orderBy is over
+    scaling-event direction in ONE window scan. The global orderBy is over
     the pre-aggregated ~720-row hourly series, not the raw events, so the
     single-task window is fine at any event volume."""
     w = Window.orderBy("hour")
     wma = Window.orderBy("hour").rowsBetween(-2, 2)
     wcum = Window.orderBy("hour").rowsBetween(Window.unboundedPreceding, 0)
     prev = F.lag("cnt").over(w)
-    return _hourly_counts(events).select(
+    hourly = events.groupBy(F.date_trunc("hour", F.col("ts")).alias("hour"))
+    return hourly.agg(F.count("*").alias("cnt")).select(
         "hour",
         "cnt",
         (F.col("cnt") - prev).alias("delta"),

@@ -22,7 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-TURN_NAME = "turn-%05d"  # stable per-turn identifier (ref: filename, P8/P9)
+# stable per-turn identifier (ref: filename, P8/P9), shared with the
+# streaming fold (streaming/state.py) so batch and stream name turns alike
+TURN_NAME = "turn-%05d"
 
 DOCS_MODEL = "det-count-v1-docs"
 DOCS_BASE_TS = "2025-01-01 00:00:00"

@@ -40,20 +40,6 @@ LABEL_REGISTRY = T.StructType(
     ]
 )
 
-# ---------------------------------------------------------------------------
-# Per-conversation job parameters (reference SubmitJobRequest defaults:
-# backend-service/handlers/handlers.go:63-69, schemas/requests.py:26-37).
-# ---------------------------------------------------------------------------
-CONV_CONFIG = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), False),
-        T.StructField("job_type", T.StringType(), False),
-        T.StructField("top_k", T.IntegerType(), False),
-        T.StructField("confidence_threshold", T.DoubleType(), False),
-        T.StructField("n_turns", T.IntegerType(), False),
-    ]
-)
-
 PREDICTION = T.StructType(
     [
         T.StructField("label", T.StringType(), False),

@@ -7,7 +7,7 @@ session in the same query:
     readStream(transcripts) ──watermark(ts)──▶ broadcast stream-static
       join (conv_config on conv_id) ──▶ label registry as plan constants
       (job_type IN filter + model_name literal map, collected once per run)
-      ──▶ vectorized classification on scan partitions (Arrow pandas UDF,
+      ──▶ vectorized classification on scan partitions (Arrow UDF,
           K1-K6/P6 — no shuffle before the kernel)
       ──▶ exchange on bucket = hash(conv_id) % B
       ──▶ applyInPandasWithState(bucket_fold)                    [A1-A6, T5]

@@ -54,6 +54,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import types as T
 
+from distributed_classification_system_spark.operators.sessionize import TURN_NAME
+
 # pyspark's own applyInPandasWithState serializer pads each output batch
 # with all-NA rows through pd.concat (pyspark/sql/pandas/serializers.py:1696
 # in pyspark 4.1.2), and pandas deprecates that with a FutureWarning. The
@@ -102,7 +104,6 @@ SUMMARY_JSON_SCHEMA = (
     " processing_time_ms:double, completed_at:timestamp>"
 )
 
-TURN_NAME = "turn-%05d"
 SESSION_GAP_MS = 10 * 60 * 1000  # close-by-timeout gap after last activity
 
 _OUT_COLS = [f.name for f in FOLD_OUTPUT.fields]

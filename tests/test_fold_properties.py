@@ -15,11 +15,17 @@ import random
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
+from pyspark.sql.pandas.types import to_arrow_type
 
-from distributed_classification_system_spark.functions.kernel import score_text
+from distributed_classification_system_spark.functions.kernel import (
+    CLASSIFY_RESULT,
+    make_registry_classify_udf,
+    score_text,
+)
 from distributed_classification_system_spark.streaming.state import (
     STATE_FORMAT_VERSION,
     _expire_due,
@@ -205,29 +211,45 @@ def test_bucket_fold_state_format_version():
     assert list(turns[0]["turn_idx"]) == [2, 3]
 
 
-@given(
-    st.lists(st.sampled_from(LABELS + ["the", "a", "dog dog"]), max_size=30),
+# two job_types, one wider than 64 labels: the kernel's argpartition path
+KERNEL_REGISTRY = {"job": LABELS, "wide": [f"w{i:03d}" for i in range(80)]}
+_KERNEL_ROW = st.tuples(
+    st.one_of(
+        st.none(),
+        st.lists(
+            st.sampled_from(LABELS + ["the", "a", "dog dog", "w000", "w001", "w042", "w079"]),
+            max_size=30,
+        ).map(" ".join),
+    ),
+    st.sampled_from(sorted(KERNEL_REGISTRY)),
     st.integers(1, 5),
     st.floats(0.05, 0.95),
 )
-@settings(max_examples=100, deadline=None)
-def test_kernel_udf_matches_scalar_oracle(tokens, top_k, threshold):
-    """The vectorized kernel body equals the scalar reference on arbitrary
-    token sequences (same scores bit-for-bit, same ordering/relabeling)."""
-    from distributed_classification_system_spark.functions.kernel import make_registry_classify_udf
 
-    text = " ".join(tokens)
-    got = make_registry_classify_udf({"job": LABELS}).func(
-        pd.Series([text]),
-        pd.Series(["job"]),
-        pd.Series([top_k]),
-        pd.Series([threshold]),
-    ).iloc[0]
-    want = score_text(text, LABELS, top_k, threshold)
-    assert got["top_prediction"] == want["top_prediction"]
-    assert got["top_confidence"] == want["top_confidence"]
-    assert got["reason"] == want["reason"]
-    assert got["processing_time_ms"] == want["processing_time_ms"]
-    assert [(p["label"], p["score"]) for p in got["all_predictions"]] == [
-        (p["label"], p["score"]) for p in want["all_predictions"]
-    ]
+
+@given(st.lists(_KERNEL_ROW, max_size=12))
+@example(rows=[])  # a zero-row batch must still return a typed, empty struct array
+@settings(max_examples=100, deadline=None)
+def test_kernel_udf_matches_scalar_oracle(rows):
+    """The vectorized kernel body equals the scalar reference row by row
+    on multi-row batches (same scores bit-for-bit, same ordering and
+    relabeling): rows of two job_types interleaved, null and empty text,
+    so each group's top-k lists must land back in row order."""
+    texts, jobs, ks, thrs = zip(*rows) if rows else ((), (), (), ())
+    got = make_registry_classify_udf(KERNEL_REGISTRY).func(
+        pa.array(texts, pa.string()),
+        pa.array(jobs, pa.string()),
+        pa.array(ks, pa.int32()),
+        pa.array(thrs, pa.float64()),
+    )
+    assert got.type == to_arrow_type(CLASSIFY_RESULT)
+    assert len(got) == len(rows)
+    for got_row, (text, job, top_k, threshold) in zip(got.to_pylist(), rows):
+        want = score_text(text, KERNEL_REGISTRY[job], top_k, threshold)
+        assert got_row["top_prediction"] == want["top_prediction"]
+        assert got_row["top_confidence"] == want["top_confidence"]
+        assert got_row["reason"] == want["reason"]
+        assert got_row["processing_time_ms"] == want["processing_time_ms"]
+        assert [(p["label"], p["score"]) for p in got_row["all_predictions"]] == [
+            (p["label"], p["score"]) for p in want["all_predictions"]
+        ]

@@ -1,4 +1,4 @@
-"""Kernel tests: scalar oracle ≡ pandas UDF ≡ Catalyst expression; edge
+"""Kernel tests: scalar oracle ≡ Arrow UDF ≡ Catalyst expression; edge
 cases for top-k, thresholds, ties (SURVEY.md §2.3); the batch path's
 registry dispatch."""
 
@@ -184,14 +184,14 @@ def test_registry_udf_rejects_unregistered_job_types():
     """A row the registry cannot classify raises, naming its job_type,
     instead of leaving its output slots unfilled (a null job_type used to
     read top_confidence from an uninitialised slot)."""
-    import pandas as pd
+    import pyarrow as pa
 
     kern = make_registry_classify_udf({"a": LABELS}).func
-    text = pd.Series(["dog cat", "dog"])
-    k, thr = pd.Series([2, 2]), pd.Series([0.0, 0.0])
-    ok = kern(text, pd.Series(["a", "a"]), k, thr)
-    assert list(ok["top_prediction"]) == ["cat", "dog"]
+    text = pa.array(["dog cat", "dog"])
+    k, thr = pa.array([2, 2], pa.int32()), pa.array([0.0, 0.0])
+    ok = kern(text, pa.array(["a", "a"]), k, thr)
+    assert ok.field("top_prediction").to_pylist() == ["cat", "dog"]
     with pytest.raises(ValueError, match=r"job_type\(s\) \[None\]"):
-        kern(text, pd.Series(["a", None]), k, thr)
+        kern(text, pa.array(["a", None]), k, thr)
     with pytest.raises(ValueError, match=r"job_type\(s\) \['zz'\]"):
-        kern(text, pd.Series(["zz", "a"]), k, thr)
+        kern(text, pa.array(["zz", "a"]), k, thr)
